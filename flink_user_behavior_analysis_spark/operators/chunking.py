@@ -514,20 +514,17 @@ def span_store_counts(corpus: DataFrame, prefix: str,
     {prefix}_spancounts (fp, n_corpus); each arriving batch then
     fingerprints only itself and probes (probe ≡ inline,
     test-asserted). At real scale this table is also the thing a
-    merge job updates per accepted batch (counts are additive)."""
-    from ..sources.readers import (clear_append_ledger,
-                                   invalidate_manifest, write_bucketed)
+    merge job updates per accepted batch (counts are additive).
+    Shared build bracket: sources/readers.py."""
+    from ..sources.readers import build_index, write_bucketed
 
-    invalidate_manifest(corpus.sparkSession, prefix)  # rebuild bracket: open
-    clear_append_ledger(corpus.sparkSession, prefix,  # new generation
-                        includes_appends=rebuild_includes_appends)
-    occ = span_fp_counts(corpus, span_tokens, id_col, text_col)
-    write_bucketed(occ, f"{prefix}_spancounts", "fp", n_buckets)
-    names = [f"{prefix}_spancounts"]
-    from ..sources.readers import write_manifest
+    def write() -> list[str]:
+        occ = span_fp_counts(corpus, span_tokens, id_col, text_col)
+        write_bucketed(occ, f"{prefix}_spancounts", "fp", n_buckets)
+        return [f"{prefix}_spancounts"]
 
-    write_manifest(corpus.sparkSession, prefix, names)  # commit marker LAST
-    return names
+    return build_index(corpus.sparkSession, prefix, write,
+                       includes_appends=rebuild_includes_appends)
 
 
 def span_append_counts(spark, prefix: str, accepted: DataFrame,
@@ -538,39 +535,23 @@ def span_append_counts(spark, prefix: str, accepted: DataFrame,
     """The merge job span_store_counts' docstring promises: fold an
     accepted batch's span-fingerprint counts into the stored
     additive table — fingerprint ONLY the batch, merge-rewrite the
-    fp-keyed counts one-row-per-key under the catalog's own bucket
-    spec (a blind append would leave duplicate fp keys, and the
-    probe join reads counts as single rows, not sums). Append cost
-    is O(count table + batch text); probing after the append equals
-    probing a one-shot store of the union (test-asserted — counts
-    are additive over disjoint doc sets).
+    fp-keyed counts under the catalog's own bucket spec
+    (readers.merge_counts). Append cost is O(count table + batch
+    text); probing after the append equals probing a one-shot store
+    of the union (test-asserted — counts are additive over disjoint
+    doc sets). Exactly-once through the shared manifest-bracket
+    append (sources/readers.py)."""
+    from ..sources.readers import merge_counts, transactional_append
 
-    Same manifest-bracket transaction + batch_id ledger as every
-    other stored family: crash -> not-ready -> gated rebuild (ledger
-    cleared); committed re-delivery -> no-op."""
-    from ..sources.readers import (append_recorded, require_bucket_count,
-                                   require_index_ready,
-                                   transactional_append, write_bucketed)
+    def stage():
+        return accepted.count(), merge_counts(
+            spark, f"{prefix}_spancounts",
+            span_fp_counts(accepted, span_tokens, id_col, text_col),
+            ["fp"], "n_corpus", bucket_col="fp")
 
-    require_index_ready(spark, prefix, "span_append_counts")
-    if batch_id is not None and append_recorded(spark, prefix, batch_id):
-        return 0  # committed re-delivery: skip BEFORE any batch compute
-    n_batch = accepted.count()
-    batch_counts = span_fp_counts(accepted, span_tokens, id_col, text_col)
-    nb = require_bucket_count(spark, f"{prefix}_spancounts")
-    merged = (spark.table(f"{prefix}_spancounts")
-              .unionByName(batch_counts)
-              .groupBy("fp")
-              .agg(F.sum("n_corpus").cast("long").alias("n_corpus"))
-              .localCheckpoint(eager=True))
-
-    def _write():
-        write_bucketed(merged, f"{prefix}_spancounts", "fp", nb)
-
-    ran = transactional_append(
+    return transactional_append(
         spark, prefix, [f"{prefix}_spancounts"], batch_id,
-        "span_append_counts", _write, pre_checked=True)
-    return int(n_batch) if ran else 0
+        "span_append_counts", stage)
 
 
 def duplicated_spans_incremental_from_store(

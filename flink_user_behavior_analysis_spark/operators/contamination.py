@@ -133,24 +133,16 @@ def contam_store_grams(corpus: DataFrame, prefix: str, n: int = 5,
     ever rescanning the corpus text — the 100 TB shingling cost is
     paid once per corpus version, not once per eval release.
 
-    Same crash-atomic skeleton as every other *_store_* builder:
-    manifest invalidated first, ledger cleared for the new generation
-    (quarantining discarded append batches unless
-    rebuild_includes_appends asserts the corpus absorbed them),
-    commit marker written LAST."""
-    from ..sources.readers import (clear_append_ledger,
-                                   invalidate_manifest, write_bucketed,
-                                   write_manifest)
+    Shared build bracket: sources/readers.py."""
+    from ..sources.readers import build_index, write_bucketed
 
-    spark = corpus.sparkSession
-    invalidate_manifest(spark, prefix)  # rebuild bracket: open
-    clear_append_ledger(spark, prefix,  # new generation
-                        includes_appends=rebuild_includes_appends)
-    write_bucketed(_gram_fps(corpus, n, id_col, text_col),
-                   f"{prefix}_grams", "gram_fp", n_buckets)
-    names = [f"{prefix}_grams"]
-    write_manifest(spark, prefix, names)
-    return names
+    def write() -> list[str]:
+        write_bucketed(_gram_fps(corpus, n, id_col, text_col),
+                       f"{prefix}_grams", "gram_fp", n_buckets)
+        return [f"{prefix}_grams"]
+
+    return build_index(corpus.sparkSession, prefix, write,
+                       includes_appends=rebuild_includes_appends)
 
 
 def contam_append_grams(spark, prefix: str, new_docs: DataFrame,
@@ -161,8 +153,8 @@ def contam_append_grams(spark, prefix: str, new_docs: DataFrame,
     ONLY the batch and append its (gram_fp, id) rows — a plain
     bucketed append preserves the probe join's co-partitioning.
     ``n`` MUST match the store (gram fps are a function of it).
-    Exactly-once via the shared manifest-bracket transactional
-    skeleton.
+    Exactly-once through the shared manifest-bracket append
+    (sources/readers.py).
 
     PRECONDITION (ADVICE r10): batch doc ids must be DISJOINT from
     docs already in the index — the index is additive over disjoint
@@ -171,25 +163,19 @@ def contam_append_grams(spark, prefix: str, new_docs: DataFrame,
     rows twice; the probe defends in depth by counting DISTINCT
     gram_fp per doc, so n_hits stays correct even then, but the
     duplicate rows still cost index bytes — don't rely on it."""
-    from ..sources.readers import (append_bucketed, append_recorded,
-                                   require_bucket_count,
-                                   require_index_ready,
+    from ..sources.readers import (append_bucketed, require_bucket_count,
                                    transactional_append)
 
-    require_index_ready(spark, prefix, "contam_append_grams")
-    if batch_id is not None and append_recorded(spark, prefix, batch_id):
-        return 0  # committed re-delivery: skip the batch compute
-    fps = _gram_fps(new_docs, n, id_col, text_col)
-    n_batch = new_docs.count()
-    nb = require_bucket_count(spark, f"{prefix}_grams")
+    def stage():
+        fps = _gram_fps(new_docs, n, id_col, text_col)
+        n_batch = new_docs.count()
+        nb = require_bucket_count(spark, f"{prefix}_grams")
+        return n_batch, lambda: append_bucketed(
+            fps, f"{prefix}_grams", "gram_fp", nb)
 
-    def _write():
-        append_bucketed(fps, f"{prefix}_grams", "gram_fp", nb)
-
-    ran = transactional_append(
+    return transactional_append(
         spark, prefix, [f"{prefix}_grams"], batch_id,
-        "contam_append_grams", _write, pre_checked=True)
-    return int(n_batch) if ran else 0
+        "contam_append_grams", stage)
 
 
 def contamination_from_store(spark, prefix: str, eval_docs: DataFrame,

@@ -657,27 +657,21 @@ def dedup_store_corpus(corpus: DataFrame, prefix: str, k: int = 12,
     Built once per corpus version; each arriving batch then signs
     and shingles ONLY ITSELF and probes these tables
     (dedup_incremental with corpus_buckets/corpus_shingles, probe ≡
-    inline test-asserted)."""
-    from ..sources.readers import (clear_append_ledger,
-                                   invalidate_manifest, write_bucketed)
+    inline test-asserted). Committed through the shared build bracket
+    (sources/readers.py)."""
+    from ..sources.readers import build_index, write_bucketed
 
-    invalidate_manifest(corpus.sparkSession, prefix)  # rebuild bracket: open
-    # new generation; rebuild_includes_appends=True asserts `corpus`
-    # already absorbed every appended batch, waiving the quarantine
-    # inline (ADVICE r9 — see clear_append_ledger)
-    clear_append_ledger(corpus.sparkSession, prefix,
-                        includes_appends=rebuild_includes_appends)
-    sigs = minhash_signatures(corpus, k, id_col, text_col, n)
-    bc = band_buckets(sigs, k, bands, id_col)
-    write_bucketed(bc, f"{prefix}_buckets", "bucket", n_buckets)
-    sh = with_shingles(corpus, id_col, text_col, n).select(
-        F.col(id_col), F.col("shingles"))
-    write_bucketed(sh, f"{prefix}_shingles", id_col, n_buckets)
-    names = [f"{prefix}_buckets", f"{prefix}_shingles"]
-    from ..sources.readers import write_manifest
+    def write() -> list[str]:
+        sigs = minhash_signatures(corpus, k, id_col, text_col, n)
+        bc = band_buckets(sigs, k, bands, id_col)
+        write_bucketed(bc, f"{prefix}_buckets", "bucket", n_buckets)
+        sh = with_shingles(corpus, id_col, text_col, n).select(
+            F.col(id_col), F.col("shingles"))
+        write_bucketed(sh, f"{prefix}_shingles", id_col, n_buckets)
+        return [f"{prefix}_buckets", f"{prefix}_shingles"]
 
-    write_manifest(corpus.sparkSession, prefix, names)  # commit marker LAST
-    return names
+    return build_index(corpus.sparkSession, prefix, write,
+                       includes_appends=rebuild_includes_appends)
 
 
 def dedup_append_corpus(spark, prefix: str, accepted: DataFrame,
@@ -694,36 +688,29 @@ def dedup_append_corpus(spark, prefix: str, accepted: DataFrame,
     probe joins co-partitioned). ``k/bands/n`` MUST match the store
     (the hyperparameter contract documented on dedup_store_corpus);
     signatures computed under different parameters would silently
-    never collide with the stored buckets.
-
-    Same transaction/ledger shape as the other stored families:
-    manifest invalidated first and recommitted last (crash anywhere
-    -> not-ready -> gated rebuild, which clears the ledger), batch
-    ledger recorded just before the recommit -> exactly-once."""
-    from ..sources.readers import (append_bucketed, append_recorded,
-                                   require_bucket_count,
-                                   require_index_ready,
+    never collide with the stored buckets. Exactly-once through the
+    shared manifest-bracket append (sources/readers.py)."""
+    from ..sources.readers import (append_bucketed, require_bucket_count,
                                    transactional_append)
 
-    require_index_ready(spark, prefix, "dedup_append_corpus")
-    if batch_id is not None and append_recorded(spark, prefix, batch_id):
-        return 0  # committed re-delivery: skip BEFORE any batch compute
-    n_batch = accepted.count()
-    sigs = minhash_signatures(accepted, k, id_col, text_col, n)
-    bc = band_buckets(sigs, k, bands, id_col)
-    sh = with_shingles(accepted, id_col, text_col, n).select(
-        F.col(id_col), F.col("shingles"))
-    nb_b = require_bucket_count(spark, f"{prefix}_buckets")
-    nb_s = require_bucket_count(spark, f"{prefix}_shingles")
+    def stage():
+        n_batch = accepted.count()
+        sigs = minhash_signatures(accepted, k, id_col, text_col, n)
+        bc = band_buckets(sigs, k, bands, id_col)
+        sh = with_shingles(accepted, id_col, text_col, n).select(
+            F.col(id_col), F.col("shingles"))
+        nb_b = require_bucket_count(spark, f"{prefix}_buckets")
+        nb_s = require_bucket_count(spark, f"{prefix}_shingles")
 
-    def _write():
-        append_bucketed(bc, f"{prefix}_buckets", "bucket", nb_b)
-        append_bucketed(sh, f"{prefix}_shingles", id_col, nb_s)
+        def write():
+            append_bucketed(bc, f"{prefix}_buckets", "bucket", nb_b)
+            append_bucketed(sh, f"{prefix}_shingles", id_col, nb_s)
 
-    ran = transactional_append(
+        return n_batch, write
+
+    return transactional_append(
         spark, prefix, [f"{prefix}_buckets", f"{prefix}_shingles"],
-        batch_id, "dedup_append_corpus", _write, pre_checked=True)
-    return int(n_batch) if ran else 0
+        batch_id, "dedup_append_corpus", stage)
 
 
 def dedup_incremental_from_store(spark, prefix: str, delta: DataFrame,

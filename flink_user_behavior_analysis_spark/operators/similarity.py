@@ -19,8 +19,6 @@ DOUBLE[] lists) to well below the 4-decimal rounding used in outputs.
 
 from __future__ import annotations
 
-import threading
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -31,6 +29,12 @@ from pyspark.sql.types import (
     StringType,
     StructField,
     StructType,
+)
+
+# re-exported: the append entry points here raise MaintenanceFailedError
+from ..sources.readers import (  # noqa: F401
+    MaintenanceFailedError,
+    _maybe_auto_compact,
 )
 
 
@@ -1898,72 +1902,65 @@ def ivfpq_store_index(corpus: DataFrame, prefix: str,
     FILTERED search (ivfpq_topk_filtered_from_index) evaluates its
     metadata predicate as a pushed parquet filter on the inverted-
     file scan — no join against a metadata table at query time.
+    Committed through the shared build bracket (sources/readers.py).
     """
-    from ..sources.readers import (clear_append_ledger,
-                                   invalidate_manifest, save_as_table)
+    from ..sources.readers import build_index, overwrite_table
 
     model = ivfpq_fit(corpus, n_centroids=n_centroids, m=m,
                       codes=codes, coarse_iters=coarse_iters,
                       pq_iters=pq_iters, id_col=id_col,
                       vec_col=vec_col)
     spark = corpus.sparkSession
-    # rebuild bracket opens AFTER the driver-side fit: the fit writes
-    # nothing, so invalidating first would only leave a previously
-    # good index not-ready (readers re-triggering rebuilds, appends
-    # refused) for the whole k-means duration. Ledger cleared inside
-    # the bracket: the new generation lacks appended batches' data,
-    # so stale entries would turn re-delivery into silent loss.
-    invalidate_manifest(spark, prefix)
-    clear_append_ledger(spark, prefix,
-                        includes_appends=rebuild_includes_appends)
-    cent_rows = [
-        (c, d, model["centroids"][c][d])
-        for c in range(len(model["centroids"]))
-        for d in range(len(model["centroids"][c]))
-    ]
-    cent = spark.createDataFrame(cent_rows, "cell INT, dim INT, val DOUBLE")
-    save_as_table(cent.write.mode("overwrite").format("parquet"),
-                  f"{prefix}_centroids")
-    cb_rows = [
+
+    def write() -> list[str]:
+        cent_rows = [
+            (c, d, model["centroids"][c][d])
+            for c in range(len(model["centroids"]))
+            for d in range(len(model["centroids"][c]))
+        ]
+        overwrite_table(spark.createDataFrame(
+            cent_rows, "cell INT, dim INT, val DOUBLE"), f"{prefix}_centroids")
+        overwrite_table(_codebook_frame(spark, model), f"{prefix}_codebook")
+        enc = ivfpq_encode(corpus, model, id_col, vec_col)
+        if meta_cols:
+            meta = corpus.select(F.col(id_col).alias("_mid"),
+                                 *[F.col(c) for c in meta_cols])
+            enc = enc.join(meta, enc[id_col] == meta["_mid"]).drop("_mid")
+        # second-level partition key for exactly-once ingestion: the
+        # build lands under _batch="base"; each later append lands
+        # under its own batch id, so a re-delivered append can
+        # dynamic-overwrite ONLY its own (cell, batch) partitions.
+        # Probes filter on cell alone — first-level pruning is
+        # unaffected.
+        overwrite_table(enc.withColumn("_batch", F.lit("base")),
+                        f"{prefix}_codes", ("cell", "_batch"))
+        names = [f"{prefix}_centroids", f"{prefix}_codebook",
+                 f"{prefix}_codes"]
+        if truth_queries is not None:
+            truth = brute_force_topk_arrow(truth_queries, corpus, truth_k,
+                                           id_col=id_col, vec_col=vec_col)
+            overwrite_table(truth, f"{prefix}_truth")
+            names.append(f"{prefix}_truth")
+        return names
+
+    # the bracket opens AFTER the driver-side fit: the fit writes
+    # nothing, so opening first would only leave a good index
+    # not-ready (readers rebuilding, appends refused) for the whole
+    # k-means duration
+    return build_index(spark, prefix, write,
+                       includes_appends=rebuild_includes_appends)
+
+
+def _codebook_frame(spark, model: dict) -> DataFrame:
+    """(sub, cent, dim, val) rows of a PQ model's codebooks."""
+    rows = [
         (j, c, d, model["codebooks"][j][c][d])
         for j in range(model["m"])
         for c in range(len(model["codebooks"][j]))
         for d in range(model["sub"])
     ]
-    cb = spark.createDataFrame(
-        cb_rows, "sub INT, cent INT, dim INT, val DOUBLE")
-    save_as_table(cb.write.mode("overwrite").format("parquet"),
-                  f"{prefix}_codebook")
-    enc = ivfpq_encode(corpus, model, id_col, vec_col)
-    if meta_cols:
-        meta = corpus.select(F.col(id_col).alias("_mid"),
-                             *[F.col(c) for c in meta_cols])
-        enc = enc.join(meta, enc[id_col] == meta["_mid"]).drop("_mid")
-    # second-level partition key for exactly-once ingestion: the
-    # build lands under _batch="base"; each later append lands under
-    # its own batch id, so a re-delivered append can dynamic-
-    # overwrite ONLY its own (cell, batch) partitions. Probes filter
-    # on cell alone — first-level pruning is unaffected.
-    save_as_table(
-        enc.withColumn("_batch", F.lit("base"))
-        .write.mode("overwrite").format("parquet")
-        .partitionBy("cell", "_batch"),
-        f"{prefix}_codes")
-    names = [f"{prefix}_centroids", f"{prefix}_codebook",
-             f"{prefix}_codes"]
-    if truth_queries is not None:
-        truth = brute_force_topk_arrow(truth_queries, corpus, truth_k,
-                                       id_col=id_col, vec_col=vec_col)
-        save_as_table(truth.write.mode("overwrite").format("parquet"),
-                      f"{prefix}_truth")
-        names.append(f"{prefix}_truth")
-    # commit marker LAST (VERDICT r6 #2): a crash mid-build leaves no
-    # manifest, so index_ready-gated callers rebuild instead of
-    # trusting a half-index
-    from ..sources.readers import write_manifest
-
-    write_manifest(spark, prefix, names)
-    return names
+    return spark.createDataFrame(rows,
+                                 "sub INT, cent INT, dim INT, val DOUBLE")
 
 
 def ivfpq_read_index(spark, prefix: str) -> tuple[dict, DataFrame]:
@@ -1976,16 +1973,8 @@ def ivfpq_read_index(spark, prefix: str) -> tuple[dict, DataFrame]:
     cents = [[0.0] * d for _ in range(n_cells)]
     for r in c_rows:
         cents[r.cell][r.dim] = r.val
-    b_rows = spark.table(f"{prefix}_codebook").collect()
-    m = max(r.sub for r in b_rows) + 1
-    sub = max(r.dim for r in b_rows) + 1
-    n_codes = max(r.cent for r in b_rows) + 1
-    books = [[[0.0] * sub for _ in range(n_codes)] for _ in range(m)]
-    for r in b_rows:
-        books[r.sub][r.cent][r.dim] = r.val
-    model = {"m": m, "sub": sub, "codebooks": books,
-             "centroids": cents}
-    return model, spark.table(f"{prefix}_codes")
+    model, codes = pq_read_index(spark, prefix)
+    return {**model, "centroids": cents}, codes
 
 
 def ivfpq_topk_from_index(spark, prefix: str, queries: DataFrame,
@@ -2033,58 +2022,6 @@ def ivfpq_topk_filtered_from_index(spark, prefix: str, queries: DataFrame,
                       model=model, encoded=filtered)
 
 
-_DYNAMIC_OVERWRITE_LOCK = threading.Lock()
-
-
-def _dynamic_overwrite_insert(spark, aligned: DataFrame,
-                              table: str) -> None:
-    """insertInto under DYNAMIC partition-overwrite: replaces only
-    the partitions present in ``aligned`` (positional columns, the
-    table's own partitioning). The mode must be set on the SESSION
-    conf — the per-writer ``option("partitionOverwriteMode", ...)``
-    is not honored on the insertInto path and a STATIC overwrite
-    with no partition spec truncates the whole table (observed, and
-    exactly the failure this helper exists to prevent); conf is
-    restored in a finally.
-
-    The set/write/restore is serialized under a process lock: the
-    conf is SESSION-GLOBAL, so two interleaved appends could
-    otherwise restore 'static' under each other and truncate an
-    index. The lock covers every writer that goes through this
-    helper (all in-repo append paths); code outside it flipping the
-    same conf concurrently cannot be excluded by the lock — the
-    conf is RE-READ and asserted 'dynamic' immediately before the
-    insertInto (ADVICE r7), which NARROWS the race window to the
-    instant between this check and the write but cannot close it (a
-    flip landing inside that instant still truncates). On a shared
-    cluster use a table format with a transactional replaceWhere —
-    that is the real cure, not this check.
-
-    The conf is set on ``aligned``'s OWN session, not the caller's
-    handle: under foreachBatch the batch DataFrame belongs to a
-    per-query session CLONE with its own conf, and insertInto
-    resolves the mode from the session that executes the write —
-    setting it on the outer handle left the clone in 'static' and
-    truncated the whole cells table (r9: caught by the semdedup
-    streaming-ingest restart test)."""
-    key = "spark.sql.sources.partitionOverwriteMode"
-    sess = aligned.sparkSession
-    with _DYNAMIC_OVERWRITE_LOCK:
-        prev = sess.conf.get(key, "static")
-        sess.conf.set(key, "dynamic")
-        try:
-            actual = sess.conf.get(key)
-            if actual.lower() != "dynamic":
-                raise RuntimeError(
-                    f"partitionOverwriteMode flipped to {actual!r} "
-                    f"under the overwrite lock — refusing the "
-                    f"insertInto into {table}: a static overwrite "
-                    f"here would truncate the whole table")
-            aligned.write.insertInto(table, overwrite=True)
-        finally:
-            sess.conf.set(key, prev)
-
-
 def ivfpq_append_to_index(spark, prefix: str, new_vecs: DataFrame,
                           id_col: str = "vec_id",
                           vec_col: str = "embedding",
@@ -2100,35 +2037,23 @@ def ivfpq_append_to_index(spark, prefix: str, new_vecs: DataFrame,
     rows land in their partitions; the probe reads the union with
     the same partition pruning.
 
-    ``batch_id`` is the EXACTLY-ONCE ingestion contract: pass a
-    stable id for the batch (e.g. the upstream offset range) and a
-    re-delivered batch is either skipped (its id is committed in the
-    ``{prefix}_appends`` ledger) or re-run as an idempotent DYNAMIC
-    PARTITION OVERWRITE of only its own (cell, batch_id) partitions
-    — a crash anywhere in the append never duplicates rows:
-      crash mid-data-write  -> retry overwrites the torn partitions;
-      crash before the ledger write -> retry overwrites, same rows;
-      after the ledger write -> retry is a no-op.
-    Without a batch_id the write is a plain append under
-    ``_batch='adhoc'`` (at-least-once — re-delivery duplicates).
+    ``batch_id``: a stable id for the batch (e.g. the upstream offset
+    range) makes the append exactly-once — a re-delivery is skipped or
+    overwrites only its own (cell, batch_id) partitions. Without one
+    the write is a plain at-least-once append under ``_batch='adhoc'``.
 
-    ``auto_compact_files_per_cell`` is the COMPACTION CADENCE
-    (VERDICT r7 #5): after a successful append, if any cell of the
-    codes table holds more files than this, the append absorbs all
-    batches back into the base generation (ivfpq_compact_index) —
-    so a long-running ingest loop keeps its file count bounded
-    without an external maintenance scheduler. The check is one
-    driver-side catalog listing per append (files_per_partition, no
-    data read). OPT-IN (default None — a default-on rewrite would
-    silently change every existing ingest loop's append latency
-    profile); PERF.md's rule of thumb is ~2x the executor count.
-    Single-writer contract applies: the triggered compaction
-    inherits _compact_index_family's concurrent-append guard. A
-    compaction failure is raised as its own labeled error — the
-    append itself HAS committed by then (data + ledger), so the
-    caller must NOT re-ingest the batch; the torn compaction leaves
-    the manifest invalidated and gated readers rebuild, identical
-    to a crashed manual compaction.
+    ``auto_compact_files_per_cell`` is the COMPACTION CADENCE: after a
+    committed append, if any cell of the codes table holds more files
+    than this, the append absorbs all batches back into the base
+    generation (ivfpq_compact_index) — so a long-running ingest loop
+    keeps its file count bounded without an external maintenance
+    scheduler. The check is one driver-side catalog listing per
+    append (files_per_partition, no data read). OPT-IN (default None
+    — a default-on rewrite would silently change every existing
+    ingest loop's append latency profile); PERF.md's rule of thumb is
+    ~2x the executor count. A compaction failure raises
+    MaintenanceFailedError: the append itself HAS committed by then,
+    so the caller must NOT re-ingest the batch.
 
     Remaining caveats, by design:
     - quantization error for drifted data grows until the next refit
@@ -2140,101 +2065,27 @@ def ivfpq_append_to_index(spark, prefix: str, new_vecs: DataFrame,
       over the merged corpus fed into the shared recall evaluation
       (queries_pipeline._recall_frame / _recall_certificate;
       test_recall_certificate_after_index_append pins it).
+
+    Exactly-once ledger, idempotent (cell, _batch) overwrite and
+    compaction cadence: sources/readers.py partitioned_append.
     """
-    from ..sources.readers import (append_recorded, record_append,
-                                   require_appendable,
-                                   require_index_ready)
+    from ..sources.readers import partitioned_append
 
-    # appending onto a torn-rebuild index would report success and
-    # then lose the batch when the gated reader rebuilds — same gate
-    # as the manifest-bracket families
-    require_index_ready(spark, prefix, "ivfpq_append_to_index")
-    if batch_id is not None and append_recorded(spark, prefix, batch_id):
-        return 0
-    require_appendable(spark, prefix, batch_id, "ivfpq_append_to_index")
-    model, _ = ivfpq_read_index(spark, prefix)
-    enc = ivfpq_encode(new_vecs, model, id_col, vec_col)
-    if meta_cols:
-        meta = new_vecs.select(F.col(id_col).alias("_mid"),
-                               *[F.col(c) for c in meta_cols])
-        enc = enc.join(meta, enc[id_col] == meta["_mid"]).drop("_mid")
-    enc = enc.withColumn("_batch", F.lit(batch_id or "adhoc"))
-    # the encode is an opaque Arrow map — count() would execute it in
-    # full and the write would re-execute it; persist so the dominant
-    # route+encode scan runs exactly once per append
-    enc = enc.persist()
-    try:
-        n = enc.count()
-        # align column order to the existing table (partition cols
-        # last) — insertInto is positional
-        existing = [f.name for f in spark.table(f"{prefix}_codes").schema]
-        aligned = enc.select(*existing)
-        if batch_id is not None:
-            _dynamic_overwrite_insert(spark, aligned,
-                                      f"{prefix}_codes")
-        else:
-            aligned.write.mode("append").format("parquet") \
-                .partitionBy("cell", "_batch") \
-                .saveAsTable(f"{prefix}_codes")
-    finally:
-        enc.unpersist()
-    # cross-session relation-cache refresh (see transactional_append):
-    # under foreachBatch the write ran in the micro-batch clone, and
-    # ``spark``'s cached listing for the codes table would stay stale
-    spark.catalog.refreshTable(f"{prefix}_codes")
-    if batch_id is not None:
-        record_append(spark, prefix, batch_id)  # ledger LAST
-    _maybe_auto_compact(spark, prefix, f"{prefix}_codes",
-                        auto_compact_files_per_cell,
-                        lambda: ivfpq_compact_index(spark, prefix),
-                        committed_rows=int(n))
-    return int(n)
+    def stage() -> DataFrame:
+        model, _ = ivfpq_read_index(spark, prefix)
+        enc = ivfpq_encode(new_vecs, model, id_col, vec_col)
+        if meta_cols:
+            meta = new_vecs.select(F.col(id_col).alias("_mid"),
+                                   *[F.col(c) for c in meta_cols])
+            enc = enc.join(meta, enc[id_col] == meta["_mid"]).drop("_mid")
+        # the encode is an opaque Arrow map — count() would execute it
+        # in full and the write would re-execute it; persist so the
+        # dominant route+encode scan runs exactly once per append
+        return enc.persist()
 
-
-class MaintenanceFailedError(RuntimeError):
-    """The APPEND COMMITTED (data + ledger) but the in-path
-    auto-compaction that followed it failed. Distinct type (ADVICE
-    r8) so orchestrators do not mark the batch failed: for ledgered
-    batch_id appends a blind retry is harmless (the ledger dedupes it
-    to 0) but unnecessary; for batch_id=None it would DUPLICATE rows.
-    Carries ``committed_rows`` — the count the append would have
-    returned — plus ``prefix``/``table`` for the maintenance ticket.
-    """
-
-    def __init__(self, prefix: str, table: str, committed_rows: int):
-        self.prefix = prefix
-        self.table = table
-        self.committed_rows = int(committed_rows)
-        super().__init__(
-            f"auto-compaction of {table} failed AFTER the append "
-            f"committed {self.committed_rows} row(s) (data + ledger) "
-            f"— do NOT re-ingest the batch; the index is left "
-            f"not-ready and gated readers will rebuild (or finish "
-            f"the compaction manually)")
-
-
-def _maybe_auto_compact(spark, prefix: str, table: str,
-                        threshold: int | None, compact_fn,
-                        committed_rows: int = 0) -> None:
-    """Shared append-path compaction trigger: fire ``compact_fn``
-    when any partition of ``table`` exceeds ``threshold`` files.
-    Runs AFTER the ledger write, so the append is already committed
-    — a crash mid-compaction leaves the manifest invalidated (gated
-    readers rebuild; torn rewrites are never served), exactly the
-    bracket a manual compaction runs under. A compaction failure
-    raises MaintenanceFailedError carrying ``committed_rows`` so the
-    caller's success (the append) is not reported as a failed
-    ingest."""
-    if threshold is None:
-        return
-    from ..sources.readers import files_per_partition
-
-    if files_per_partition(spark, table)["max_per_cell"] > threshold:
-        try:
-            compact_fn()
-        except Exception as exc:
-            raise MaintenanceFailedError(prefix, table,
-                                         committed_rows) from exc
+    return partitioned_append(spark, prefix, f"{prefix}_codes", batch_id,
+                              "ivfpq_append_to_index", stage,
+                              auto_compact_files_per_cell)
 
 
 def pq_store_index(corpus: DataFrame, prefix: str, m: int = 8,
@@ -2246,33 +2097,22 @@ def pq_store_index(corpus: DataFrame, prefix: str, m: int = 8,
     — tiny, exact) and the ENCODED corpus bucketed on the id (m
     small ints per vector — the only thing a query-time scan reads).
     The stored-artifact counterpart to bm25_store_index: fit once per
-    corpus version, then every query batch is probe-only."""
-    from ..sources.readers import (invalidate_manifest, save_as_table,
-                                   write_bucketed)
+    corpus version, then every query batch is probe-only. Shared
+    build bracket: sources/readers.py."""
+    from ..sources.readers import build_index, overwrite_table, write_bucketed
 
     model = pq_fit(corpus, m=m, codes=codes, iters=iters,
                    vec_col=vec_col)
     spark = corpus.sparkSession
-    # bracket opens after the driver-side fit (writes nothing) — see
-    # ivfpq_store_index for the not-ready-window rationale
-    invalidate_manifest(spark, prefix)
-    rows = [
-        (j, c, d, model["codebooks"][j][c][d])
-        for j in range(model["m"])
-        for c in range(len(model["codebooks"][j]))
-        for d in range(model["sub"])
-    ]
-    cb = spark.createDataFrame(
-        rows, "sub INT, cent INT, dim INT, val DOUBLE")
-    save_as_table(cb.write.mode("overwrite").format("parquet"),
-                  f"{prefix}_codebook")
-    enc = pq_encode(corpus, model, id_col, vec_col)
-    write_bucketed(enc, f"{prefix}_codes", id_col, n_buckets)
-    names = [f"{prefix}_codebook", f"{prefix}_codes"]
-    from ..sources.readers import write_manifest
 
-    write_manifest(spark, prefix, names)  # commit marker, written LAST
-    return names
+    def write() -> list[str]:
+        overwrite_table(_codebook_frame(spark, model), f"{prefix}_codebook")
+        write_bucketed(pq_encode(corpus, model, id_col, vec_col),
+                       f"{prefix}_codes", id_col, n_buckets)
+        return [f"{prefix}_codebook", f"{prefix}_codes"]
+
+    # opened after the driver-side fit, like ivfpq_store_index
+    return build_index(spark, prefix, write)
 
 
 def pq_read_index(spark, prefix: str) -> tuple[dict, DataFrame]:
@@ -2852,42 +2692,30 @@ def semdedup_store_corpus(corpus: DataFrame, centroids: list[list[float]],
     exactly-once append/compact seam (semdedup_append_corpus). An arriving batch then assigns only itself and
     probes the partitions of the cells it lands in; the corpus is
     never re-assigned and never fully re-scanned (partition pruning
-    on cell, the ivfpq_store_index pattern). Commit marker
-    ({prefix}_manifest) is written LAST — crash-atomic like every
-    other *_store_* builder."""
-    from ..sources.readers import (clear_append_ledger,
-                                   invalidate_manifest, save_as_table,
-                                   write_manifest)
+    on cell, the ivfpq_store_index pattern). Shared build bracket:
+    sources/readers.py."""
+    from ..sources.readers import build_index, overwrite_table
 
     spark = corpus.sparkSession
-    invalidate_manifest(spark, prefix)  # rebuild bracket: open
-    # new generation: appended batches are not in it — drop their
-    # ledger entries or re-delivery would be skipped (data loss);
-    # rebuild_includes_appends=True asserts `corpus` absorbed them
-    # all, waiving the quarantine inline (ADVICE r9)
-    clear_append_ledger(spark, prefix,
-                        includes_appends=rebuild_includes_appends)
-    cells = _semdedup_assigned(corpus, centroids, id_col, vec_col) \
-        .select(id_col, "cell", "cent_sim",
-                F.col("_v").alias("embedding"))
-    # (cell, _batch) two-level partitioning: same exactly-once append
-    # contract as the IVFADC codes table (see ivfpq_append_to_index)
-    save_as_table(
-        cells.withColumn("_batch", F.lit("base"))
-        .write.mode("overwrite").format("parquet")
-        .partitionBy("cell", "_batch"),
-        f"{prefix}_cells")
-    # model-identity artifact: the cells are only valid under the
-    # centroids that assigned them, so the fingerprint is part of the
-    # committed index (semdedup_index_current checks it at gate time)
-    fp = semdedup_model_fingerprint(centroids)
-    save_as_table(
-        spark.createDataFrame([(fp,)], "model_fp STRING")
-        .write.mode("overwrite").format("parquet"),
-        f"{prefix}_modelfp")
-    names = [f"{prefix}_cells", f"{prefix}_modelfp"]
-    write_manifest(spark, prefix, names)
-    return names
+
+    def write() -> list[str]:
+        cells = _semdedup_assigned(corpus, centroids, id_col, vec_col) \
+            .select(id_col, "cell", "cent_sim",
+                    F.col("_v").alias("embedding"))
+        # (cell, _batch) two-level partitioning: same exactly-once
+        # append contract as the IVFADC codes table
+        overwrite_table(cells.withColumn("_batch", F.lit("base")),
+                        f"{prefix}_cells", ("cell", "_batch"))
+        # model-identity artifact: the cells are only valid under the
+        # centroids that assigned them, so the fingerprint is part of
+        # the committed index (semdedup_index_current checks it)
+        fp = semdedup_model_fingerprint(centroids)
+        overwrite_table(spark.createDataFrame([(fp,)], "model_fp STRING"),
+                        f"{prefix}_modelfp")
+        return [f"{prefix}_cells", f"{prefix}_modelfp"]
+
+    return build_index(spark, prefix, write,
+                       includes_appends=rebuild_includes_appends)
 
 
 def semdedup_index_current(spark, prefix: str,
@@ -3072,64 +2900,6 @@ def semdedup_probe(spark, prefix: str, batch: DataFrame,
     )
 
 
-def _compact_index_family(spark, prefix: str, table_suffix: str) -> dict:
-    """Shared compaction wrapper: run compact_partitioned_table on
-    ``{prefix}_{table_suffix}`` inside the index's crash-atomicity
-    bracket — manifest invalidated before the rewrite, recommitted
-    with the SAME artifact list after, so a torn compaction reads as
-    not-ready and the gate rebuilds instead of serving a
-    half-rewritten inverted file.
-
-    SINGLE-WRITER contract: an append that commits while the rewrite
-    is in flight would be erased by the final overwrite — with its
-    ledger entry surviving, re-delivery would be skipped and the
-    loss silent. Best-effort enforcement: the append ledger is
-    snapshotted before the rewrite and re-checked after; a
-    concurrent append raises, naming the batch ids that must be
-    re-ingested under NEW ids (their data is gone, their old ids are
-    burned). A transactional table format is the real cure on a
-    shared cluster. NOTE: the guard sees only LEDGERED appends — an
-    adhoc append (batch_id=None) committing mid-rewrite is erased
-    with no detection, which is within its stated at-least-once
-    contract: use batch ids for anything you cannot lose."""
-    from ..sources.readers import (compact_partitioned_table,
-                                   invalidate_manifest,
-                                   require_index_ready, write_manifest)
-
-    # same gate as the appends: compacting an uncommitted index gets
-    # the designed ValueError, not a raw catalog error from the
-    # manifest read below
-    require_index_ready(spark, prefix, "compact_index")
-
-    def _ledger_ids() -> set:
-        if not spark.catalog.tableExists(f"{prefix}_appends"):
-            return set()
-        return {r.batch_id
-                for r in spark.table(f"{prefix}_appends").collect()}
-
-    manifest = [r.artifact
-                for r in spark.table(f"{prefix}_manifest").collect()]
-    before = _ledger_ids()
-    # invalidating first ALSO closes most of the race window: every
-    # append is gated on index_ready, so once the manifest is gone
-    # new appends refuse to start — the only exposure left is an
-    # append already past its gate when the invalidation lands
-    invalidate_manifest(spark, prefix)
-    stats = compact_partitioned_table(
-        spark, f"{prefix}_{table_suffix}", ["cell"])
-    raced = _ledger_ids() - before
-    if raced:
-        raise RuntimeError(
-            f"append(s) {sorted(raced)} committed during compaction of "
-            f"{prefix}_{table_suffix} — depending on timing their rows "
-            f"were either erased by the rewrite or absorbed into it; "
-            f"verify presence before re-ingesting under NEW batch ids "
-            f"(the old ids are burned in the ledger); the manifest is "
-            f"left invalidated so gated readers rebuild")
-    write_manifest(spark, prefix, manifest)
-    return stats
-
-
 def ivfpq_compact_index(spark, prefix: str) -> dict:
     """Maintenance op closing the ingestion lifecycle (build ->
     exactly-once append -> drift-monitor -> COMPACT -> refit):
@@ -3137,13 +2907,18 @@ def ivfpq_compact_index(spark, prefix: str) -> dict:
     into the base generation, one file set per cell. The append
     ledger survives, so absorbed batches stay deduplicated against
     re-delivery. Probe results are identical before/after
-    (test-asserted); only the file count changes."""
-    return _compact_index_family(spark, prefix, "codes")
+    (test-asserted); only the file count changes. Bracket and
+    single-writer contract: sources/readers.py compact_index."""
+    from ..sources.readers import compact_index
+
+    return compact_index(spark, prefix, f"{prefix}_codes")
 
 
 def semdedup_compact_corpus(spark, prefix: str) -> dict:
     """Same maintenance op for the SemDeDup cells table."""
-    return _compact_index_family(spark, prefix, "cells")
+    from ..sources.readers import compact_index
+
+    return compact_index(spark, prefix, f"{prefix}_cells")
 
 
 def semdedup_drift(spark, prefix: str, batch: DataFrame,
@@ -3252,9 +3027,8 @@ def semdedup_append_corpus(spark, prefix: str, accepted: DataFrame,
     (ledger-gated idempotent dynamic partition overwrite; None ->
     plain at-least-once append), and same append-path compaction
     cadence (``auto_compact_files_per_cell``) as
-    ivfpq_append_to_index."""
-    from ..sources.readers import (append_recorded, record_append,
-                                   require_appendable)
+    ivfpq_append_to_index (sources/readers.py partitioned_append)."""
+    from ..sources.readers import partitioned_append
 
     # model-identity gate, not just manifest presence: appending cells
     # assigned under a refit model into an old-model index would mix
@@ -3267,30 +3041,15 @@ def semdedup_append_corpus(spark, prefix: str, accepted: DataFrame,
             f"index under THESE centroids — the model was refit (or "
             f"the index is torn); rebuild with semdedup_store_corpus "
             f"before appending")
-    if batch_id is not None and append_recorded(spark, prefix, batch_id):
-        return 0
-    require_appendable(spark, prefix, batch_id, "semdedup_append_corpus")
-    cells = _semdedup_assigned(accepted, centroids, id_col, vec_col) \
-        .select(id_col, "cent_sim", F.col("_v").alias("embedding"),
-                "cell") \
-        .withColumn("_batch", F.lit(batch_id or "adhoc"))
-    # count() here is cheap, not a double-execute: the assignment is a
-    # pure JVM Column projection (no filter), so Catalyst prunes every
-    # cosine fold out of the count plan; only the write computes them
-    n = cells.count()
-    existing = [f.name for f in spark.table(f"{prefix}_cells").schema]
-    aligned = cells.select(*existing)
-    if batch_id is not None:
-        _dynamic_overwrite_insert(spark, aligned, f"{prefix}_cells")
-    else:
-        aligned.write.mode("append").format("parquet") \
-            .partitionBy("cell", "_batch").saveAsTable(f"{prefix}_cells")
-    # cross-session relation-cache refresh (see transactional_append)
-    spark.catalog.refreshTable(f"{prefix}_cells")
-    if batch_id is not None:
-        record_append(spark, prefix, batch_id)  # ledger LAST
-    _maybe_auto_compact(spark, prefix, f"{prefix}_cells",
-                        auto_compact_files_per_cell,
-                        lambda: semdedup_compact_corpus(spark, prefix),
-                        committed_rows=int(n))
-    return int(n)
+
+    def stage() -> DataFrame:
+        # not persisted: the assignment is a pure JVM Column
+        # projection (no filter), so Catalyst prunes every cosine
+        # fold out of the count plan; only the write computes them
+        return _semdedup_assigned(accepted, centroids, id_col, vec_col) \
+            .select(id_col, "cent_sim", F.col("_v").alias("embedding"),
+                    "cell")
+
+    return partitioned_append(spark, prefix, f"{prefix}_cells", batch_id,
+                              "semdedup_append_corpus", stage,
+                              auto_compact_files_per_cell)

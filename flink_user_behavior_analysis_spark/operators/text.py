@@ -521,30 +521,20 @@ def bm25_store_index(docs: DataFrame, prefix: str, n_buckets: int = 8,
     same bucket count (sources/readers.py:write_bucketed), so the
     probe's tf-to-dl join needs no exchange on either stored side;
     df/consts are small dimension tables the probe broadcasts anyway.
-    Returns the table names written."""
-    from ..sources.readers import (clear_append_ledger,
-                                   invalidate_manifest, save_as_table,
-                                   write_bucketed)
+    Returns the table names written (shared build bracket,
+    sources/readers.py)."""
+    from ..sources.readers import build_index, overwrite_table, write_bucketed
 
-    invalidate_manifest(docs.sparkSession, prefix)  # rebuild bracket: open
-    # new generation: appended batches are not in it — stale ledger
-    # entries would turn re-delivery into silent loss;
-    # rebuild_includes_appends=True asserts `docs` absorbed them all,
-    # waiving the quarantine inline (ADVICE r9)
-    clear_append_ledger(docs.sparkSession, prefix,
-                        includes_appends=rebuild_includes_appends)
-    idx = bm25_index(docs, id_col=id_col, text_col=text_col)
-    write_bucketed(idx["tf"], f"{prefix}_tf", id_col, n_buckets)
-    write_bucketed(idx["dl"], f"{prefix}_dl", id_col, n_buckets)
-    save_as_table(idx["df"].write.mode("overwrite").format("parquet"),
-                  f"{prefix}_df")
-    save_as_table(idx["consts"].write.mode("overwrite").format("parquet"),
-                  f"{prefix}_consts")
-    names = [f"{prefix}_{s}" for s in ("tf", "dl", "df", "consts")]
-    from ..sources.readers import write_manifest
+    def write() -> list[str]:
+        idx = bm25_index(docs, id_col=id_col, text_col=text_col)
+        write_bucketed(idx["tf"], f"{prefix}_tf", id_col, n_buckets)
+        write_bucketed(idx["dl"], f"{prefix}_dl", id_col, n_buckets)
+        overwrite_table(idx["df"], f"{prefix}_df")
+        overwrite_table(idx["consts"], f"{prefix}_consts")
+        return [f"{prefix}_{s}" for s in ("tf", "dl", "df", "consts")]
 
-    write_manifest(docs.sparkSession, prefix, names)  # commit marker LAST
-    return names
+    return build_index(docs.sparkSession, prefix, write,
+                       includes_appends=rebuild_includes_appends)
 
 
 def bm25_read_index(spark: SparkSession, prefix: str) -> dict[str, DataFrame]:
@@ -574,64 +564,50 @@ def bm25_append_to_index(spark: SparkSession, prefix: str,
              scores are BIT-IDENTICAL to rebuilding on the union
              (test-asserted).
 
-    Transactional shape: the whole append runs inside the manifest
-    bracket (invalidated first, recommitted last) — a crash at ANY
-    point leaves the index not-ready and the gated reader rebuilds
-    from source (which also clears the ledger). The ledger is
-    recorded just before the recommit, so with a ``batch_id``
-    delivery is exactly-once: re-delivery after commit is a no-op;
-    retry after a torn append lands on the rebuilt index. Unlike the
-    partitioned vector indexes there is no per-batch overwrite here
-    — the bracket IS the idempotence mechanism, bought at
-    rebuild-on-crash recovery cost."""
-    from ..sources.readers import (append_bucketed, append_recorded,
-                                   require_bucket_count,
-                                   require_index_ready, save_as_table,
+    Exactly-once through the shared manifest-bracket append
+    (sources/readers.py): unlike the partitioned vector indexes there
+    is no per-batch overwrite here — the bracket IS the idempotence
+    mechanism, bought at rebuild-on-crash recovery cost."""
+    from ..sources.readers import (append_bucketed, merge_counts,
+                                   overwrite_table, require_bucket_count,
                                    transactional_append)
 
-    require_index_ready(spark, prefix, "bm25_append_to_index")
-    if batch_id is not None and append_recorded(spark, prefix, batch_id):
-        return 0  # committed re-delivery: skip BEFORE any batch compute
-    n_batch = new_docs.count()
-    nb = require_bucket_count(spark, f"{prefix}_tf")
-    old_n_docs = spark.table(f"{prefix}_consts").collect()[0].n_docs
-    # checkpoint the batch postings: they feed both the tf append and
-    # the df merge (via re-aggregation off the blocks) — one tokenize
-    # scan instead of re-deriving the subtree per consumer
-    idx = bm25_index(new_docs, id_col=id_col, text_col=text_col)
-    tf_b = idx["tf"].localCheckpoint(eager=True)
-    df_b = tf_b.groupBy("token").agg(
-        F.count(F.lit(1)).cast("long").alias("df"))
+    def stage():
+        n_batch = new_docs.count()
+        nb = require_bucket_count(spark, f"{prefix}_tf")
+        old_n_docs = spark.table(f"{prefix}_consts").collect()[0].n_docs
+        # checkpoint the batch postings: they feed the tf append, the
+        # df merge and dl (== sum of tf per doc) — one tokenize scan
+        # instead of re-deriving the subtree per consumer
+        idx = bm25_index(new_docs, id_col=id_col, text_col=text_col)
+        tf_b = idx["tf"].localCheckpoint(eager=True)
+        dl_b = tf_b.groupBy(id_col).agg(
+            F.sum("tf").cast("long").alias("dl"))
+        write_df = merge_counts(
+            spark, f"{prefix}_df",
+            tf_b.groupBy("token").agg(
+                F.count(F.lit(1)).cast("long").alias("df")),
+            ["token"], "df")
 
-    # dl derives from the checkpointed postings (dl == sum of tf per
-    # doc), so the batch tokenize scan truly runs once per append
-    dl_b = tf_b.groupBy(id_col).agg(
-        F.sum("tf").cast("long").alias("dl"))
+        def write():
+            append_bucketed(tf_b, f"{prefix}_tf", id_col, nb)
+            append_bucketed(dl_b, f"{prefix}_dl", id_col, nb)
+            write_df()
+            stats = spark.table(f"{prefix}_dl").agg(
+                F.sum("dl").cast("double").alias("_tot"),
+                F.count(F.lit(1)).cast("double").alias("_nd")).collect()[0]
+            consts = spark.createDataFrame(
+                [(int(old_n_docs) + int(n_batch),
+                  float(stats._tot) / float(stats._nd))],
+                "n_docs BIGINT, avgdl DOUBLE")
+            overwrite_table(consts, f"{prefix}_consts")
 
-    def _write():
-        append_bucketed(tf_b, f"{prefix}_tf", id_col, nb)
-        append_bucketed(dl_b, f"{prefix}_dl", id_col, nb)
-        merged = (spark.table(f"{prefix}_df").unionByName(df_b)
-                  .groupBy("token")
-                  .agg(F.sum("df").cast("long").alias("df"))
-                  .localCheckpoint(eager=True))
-        save_as_table(merged.write.mode("overwrite").format("parquet"),
-                      f"{prefix}_df")
-        stats = spark.table(f"{prefix}_dl").agg(
-            F.sum("dl").cast("double").alias("_tot"),
-            F.count(F.lit(1)).cast("double").alias("_nd")).collect()[0]
-        consts = spark.createDataFrame(
-            [(int(old_n_docs) + int(n_batch),
-              float(stats._tot) / float(stats._nd))],
-            "n_docs BIGINT, avgdl DOUBLE")
-        save_as_table(consts.write.mode("overwrite").format("parquet"),
-                      f"{prefix}_consts")
+        return n_batch, write
 
-    ran = transactional_append(
+    return transactional_append(
         spark, prefix, [f"{prefix}_{s}" for s in ("tf", "dl", "df",
                                                   "consts")],
-        batch_id, "bm25_append_to_index", _write, pre_checked=True)
-    return int(n_batch) if ran else 0
+        batch_id, "bm25_append_to_index", stage)
 
 
 def bm25_topk_from_index(index: dict[str, DataFrame], queries: DataFrame,
@@ -820,25 +796,19 @@ def lm_store_model(docs: DataFrame, prefix: str, n_buckets: int = 8,
     """Materialize the bigram LM as catalog tables (VERDICT r4
     next-round #5): big bucketed+sorted on w1 (the probe join's
     leading key), uni bucketed on w; vocab is one row. Returns the
-    table names written."""
-    from ..sources.readers import (clear_append_ledger,
-                                   invalidate_manifest, save_as_table,
-                                   write_bucketed)
+    table names written (shared build bracket, sources/readers.py)."""
+    from ..sources.readers import build_index, overwrite_table, write_bucketed
 
-    invalidate_manifest(docs.sparkSession, prefix)  # rebuild bracket: open
-    clear_append_ledger(docs.sparkSession, prefix,  # new generation
-                        includes_appends=rebuild_includes_appends)
-    m = lm_model(docs, id_col=id_col, text_col=text_col)
-    write_bucketed(m["big"], f"{prefix}_big", "w1", n_buckets,
-                   sort_col="w1")
-    write_bucketed(m["uni"], f"{prefix}_uni", "w", n_buckets)
-    save_as_table(m["vocab"].write.mode("overwrite").format("parquet"),
-                  f"{prefix}_vocab")
-    names = [f"{prefix}_{s}" for s in ("big", "uni", "vocab")]
-    from ..sources.readers import write_manifest
+    def write() -> list[str]:
+        m = lm_model(docs, id_col=id_col, text_col=text_col)
+        write_bucketed(m["big"], f"{prefix}_big", "w1", n_buckets,
+                       sort_col="w1")
+        write_bucketed(m["uni"], f"{prefix}_uni", "w", n_buckets)
+        overwrite_table(m["vocab"], f"{prefix}_vocab")
+        return [f"{prefix}_{s}" for s in ("big", "uni", "vocab")]
 
-    write_manifest(docs.sparkSession, prefix, names)  # commit marker LAST
-    return names
+    return build_index(docs.sparkSession, prefix, write,
+                       includes_appends=rebuild_includes_appends)
 
 
 def lm_append_to_model(spark: SparkSession, prefix: str,
@@ -860,41 +830,34 @@ def lm_append_to_model(spark: SparkSession, prefix: str,
     bucket spec (read back from the catalog) for the probe's
     exchange-free w1 join.
 
-    Same transactional shape as bm25_append_to_index: everything
-    inside the manifest bracket, ledger recorded just before the
-    recommit — crash anywhere -> not-ready -> gated rebuild (which
-    clears the ledger); committed re-delivery -> no-op."""
-    from ..sources.readers import (append_recorded, require_bucket_count,
-                                   require_index_ready, save_as_table,
-                                   transactional_append, write_bucketed)
+    Same manifest-bracket append as bm25_append_to_index
+    (sources/readers.py)."""
+    from ..sources.readers import (merge_counts, overwrite_table,
+                                   transactional_append)
 
-    require_index_ready(spark, prefix, "lm_append_to_model")
-    if batch_id is not None and append_recorded(spark, prefix, batch_id):
-        return 0  # committed re-delivery: skip BEFORE any batch compute
-    m = lm_model(new_docs, id_col=id_col, text_col=text_col)
-    n_batch = new_docs.count()
-    nb = require_bucket_count(spark, f"{prefix}_big")
+    def stage():
+        m = lm_model(new_docs, id_col=id_col, text_col=text_col)
+        n_batch = new_docs.count()
+        write_uni = merge_counts(spark, f"{prefix}_uni", m["uni"], ["w"],
+                                 "cw", bucket_col="w")
+        write_big = merge_counts(spark, f"{prefix}_big", m["big"],
+                                 ["w1", "w2"], "cb", bucket_col="w1",
+                                 sort_col="w1")
 
-    merged_uni = (spark.table(f"{prefix}_uni").unionByName(m["uni"])
-                  .groupBy("w").agg(F.sum("cw").cast("long").alias("cw"))
-                  .localCheckpoint(eager=True))
-    merged_big = (spark.table(f"{prefix}_big").unionByName(m["big"])
-                  .groupBy("w1", "w2")
-                  .agg(F.sum("cb").cast("long").alias("cb"))
-                  .localCheckpoint(eager=True))
-    vocab = merged_uni.agg(F.count(F.lit(1)).cast("long").alias("v"))
+        def write():
+            write_big()
+            write_uni()
+            # vocab = merged unigram count, read back from the table
+            # just rewritten
+            overwrite_table(spark.table(f"{prefix}_uni").agg(
+                F.count(F.lit(1)).cast("long").alias("v")),
+                f"{prefix}_vocab")
 
-    def _write():
-        write_bucketed(merged_big, f"{prefix}_big", "w1", nb,
-                       sort_col="w1")
-        write_bucketed(merged_uni, f"{prefix}_uni", "w", nb)
-        save_as_table(vocab.write.mode("overwrite").format("parquet"),
-                      f"{prefix}_vocab")
+        return n_batch, write
 
-    ran = transactional_append(
+    return transactional_append(
         spark, prefix, [f"{prefix}_{s}" for s in ("big", "uni", "vocab")],
-        batch_id, "lm_append_to_model", _write, pre_checked=True)
-    return int(n_batch) if ran else 0
+        batch_id, "lm_append_to_model", stage)
 
 
 def lm_read_model(spark: SparkSession, prefix: str) -> dict[str, DataFrame]:

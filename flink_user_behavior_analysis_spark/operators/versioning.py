@@ -146,31 +146,24 @@ def snapshot_store_fps(
     versioning shape at 100 TB: the old snapshot's text is read once
     when the version is cut, and every later diff probes hash-width
     rows on a co-partitioned layout (zero-exchange against a
-    same-bucketed candidate side). Same crash-atomic skeleton as the
-    other *_store_* builders: manifest invalidated first, commit
-    marker written LAST, so a crash mid-build reads as not-ready and
-    the caller rebuilds instead of diffing against half a version.
+    same-bucketed candidate side). Committed through the shared build
+    bracket (sources/readers.py), so a crash mid-build reads as
+    not-ready and the caller rebuilds instead of diffing against half
+    a version.
 
-    Like every other *_store_* rebuild, this clears the CDC append
-    ledger under ``prefix`` (r13, closing the contract gap ADVICE
-    r12's cycle-collision finding exposed one level down): a
-    REBUILD mid-CDC-cycle invalidates the probe context every
-    already-committed slice's verdicts were emitted against, so
+    Like every other rebuild, this clears the CDC append ledger under
+    ``prefix``: a REBUILD mid-CDC-cycle invalidates the probe context
+    every already-committed slice's verdicts were emitted against, so
     those batch ids are QUARANTINED — the orchestrator must
     re-deliver them (re-probe + re-stage are idempotent) or waive
     with acknowledge_cleared. The normal lifecycle never hits this:
     cycle-start builds see no ledger, and the in-cycle version cut
-    (snapshot_cdc_compact) clears with the includes_appends waiver
-    because the cut absorbs the staged batches."""
-    from ..sources.readers import clear_append_ledger
-
-    spark = snapshot.sparkSession
+    (snapshot_cdc_compact) waives inline because the cut absorbs the
+    staged batches."""
     keys = list(key_cols)
-    clear_append_ledger(spark, prefix)
-    return snapshot_cut_version(
-        spark, prefix,
-        fingerprint_snapshot(snapshot, keys, content_cols),
-        keys, n_buckets)
+    return _cut_fps(snapshot.sparkSession, prefix,
+                    fingerprint_snapshot(snapshot, keys, content_cols),
+                    keys, n_buckets)
 
 
 def snapshot_cut_version(
@@ -184,20 +177,25 @@ def snapshot_cut_version(
     rows — the CDC compaction path (VERDICT r11 #6), where the staged
     per-slice fingerprints union to the complete candidate snapshot
     and the content was already hashed on the wire, so the version cut
-    never rereads document text. Same crash-atomic bracket as every
-    *_store_* builder: manifest invalidated first, commit marker
-    written LAST — a crash mid-cut reads as not-ready and gated
-    probes refuse instead of diffing against half a version."""
-    from ..sources.readers import (invalidate_manifest, write_bucketed,
-                                   write_manifest)
+    never rereads document text. Build bracket WITHOUT the ledger
+    clear (sources/readers.py): a crash mid-cut reads as not-ready and
+    gated probes refuse instead of diffing against half a version."""
+    return _cut_fps(spark, prefix, fps, list(key_cols), n_buckets,
+                    clear_ledger=False)
 
-    keys = list(key_cols)
-    invalidate_manifest(spark, prefix)
-    write_bucketed(fps.select(*keys, "fp"), f"{prefix}_fps",
-                   keys[0] if len(keys) == 1 else keys, n_buckets)
-    names = [f"{prefix}_fps"]
-    write_manifest(spark, prefix, names)
-    return names
+
+def _cut_fps(spark, prefix: str, fps: DataFrame, keys: list[str],
+             n_buckets: int, **ledger) -> list[str]:
+    """Write ``{prefix}_fps`` bucketed on the key inside the build
+    bracket; ``ledger`` is build_index's ledger policy."""
+    from ..sources.readers import build_index, write_bucketed
+
+    def write() -> list[str]:
+        write_bucketed(fps.select(*keys, "fp"), f"{prefix}_fps",
+                       keys[0] if len(keys) == 1 else keys, n_buckets)
+        return [f"{prefix}_fps"]
+
+    return build_index(spark, prefix, write, **ledger)
 
 
 def snapshot_diff_from_store(

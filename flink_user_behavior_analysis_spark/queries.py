@@ -2522,21 +2522,20 @@ def profit_by_nation_year_bucketed(spark: SparkSession,
     bucket counts, so the cost aggregation AND the fact-to-fact join
     plan with ZERO Exchange on the compound key (plan-asserted in
     tests/test_bucketed_join.py); the lone fact-sized exchange left
-    is the orders join on orderkey. Build is manifest-gated
-    (invalidate-first / commit-last) like every stored artifact:
-    bucket lineitem's 6-column projection once, then derive the cost
-    table from the bucketed copy — exchange-free — and store it under
-    the same bucket spec. Results are identical to the inline form
+    is the orders join on orderkey. Build is manifest-gated through
+    the shared build bracket (sources/readers.py): bucket lineitem's
+    6-column projection once, then derive the cost table from the
+    bucketed copy — exchange-free — and store it under the same
+    bucket spec. Results are identical to the inline form
     (same oracle row-for-row)."""
     from .queries_pipeline import _artifact_tag
-    from .sources.readers import (index_ready, invalidate_manifest,
-                                  write_bucketed, write_manifest)
+    from .sources.readers import build_index, index_ready, write_bucketed
 
     prefix = f"q9b_{_artifact_tag(sf_dir)}"
     li_t, costs_t = f"{prefix}_lineitem", f"{prefix}_costs"
     key = ["l_partkey", "l_suppkey"]
-    if not index_ready(spark, prefix):
-        invalidate_manifest(spark, prefix)
+
+    def write() -> list[str]:
         li = load_table(spark, sf_dir, "lineitem").select(
             "l_orderkey", "l_partkey", "l_suppkey", "l_quantity",
             "l_extendedprice", "l_discount")
@@ -2551,7 +2550,10 @@ def profit_by_nation_year_bucketed(spark: SparkSession,
         write_bucketed(costs, costs_t,
                        ["ps_partkey", "ps_suppkey"], Q9_BUCKETS,
                        sort_col=["ps_partkey", "ps_suppkey"])
-        write_manifest(spark, prefix, [li_t, costs_t])
+        return [li_t, costs_t]
+
+    if not index_ready(spark, prefix):
+        build_index(spark, prefix, write)
     return _q9_profit_rollup(spark, sf_dir,
                              spark.table(li_t), spark.table(costs_t))
 

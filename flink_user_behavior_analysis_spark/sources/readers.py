@@ -15,9 +15,44 @@ All readers produce an event-time column ``ts: TimestampType`` so
 every downstream operator is source-agnostic. Filters and projections
 applied after these readers push down into the scan (verified via
 explain(): PushedFilters / ReadSchema on parquet).
+
+Stored-artifact lifecycle. Every stored family (bm25, lm, minhash,
+spans, contamination grams, pq, ivfpq, semdedup, snapshot
+fingerprints, the bucketed Q9 tables) builds, appends and compacts
+through the functions at the end of this module; the family code
+keeps only how it derives and probes its ``{prefix}_*`` tables.
+
+- Commit. An index is COMMITTED iff ``{prefix}_manifest`` exists and
+  every table it lists exists (index_ready); gated readers rebuild
+  otherwise. build_index writes in this order: invalidate the
+  manifest, clear the append ledger, write the artifact tables, write
+  the manifest LAST. A crash anywhere inside reads as not-ready, never
+  as a half or mixed-generation index. Work that writes nothing (a
+  driver-side fit) runs before the bracket opens, so the not-ready
+  window covers only the writes.
+- Append. The ledger ``{prefix}_appends`` makes appends exactly-once
+  on at-least-once delivery (ledgered_append): a committed batch id is
+  skipped, a new id is refused while a rebuild's discarded ids are
+  quarantined (require_appendable), and the id is recorded only AFTER
+  the data. A crash between data and ledger re-runs the batch, which
+  is safe under exactly one of two recovery modes:
+  1. idempotent write (partitioned_append, ledgered_append): the batch
+     lands in its own ``(cell, _batch)`` partitions or directory, and a
+     retry overwrites them instead of duplicating them;
+  2. manifest bracket (transactional_append): the append runs between
+     invalidation and recommit, so a crash leaves the index not-ready,
+     the gated reader rebuilds from source, and the rebuild clears the
+     ledger.
+- Ledger rule. A rebuild CLEARS the ledger: its generation holds only
+  the source corpus, so the dropped ids are quarantined until
+  re-delivered or waived (clear_append_ledger). A compaction KEEPS
+  it: it absorbs the batches' rows, so their ids must keep
+  deduplicating re-delivery (compact_index).
 """
 
 from __future__ import annotations
+
+import threading
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -269,6 +304,16 @@ def write_bucketed(df: DataFrame, table: str,
     save_as_table(w.format("parquet"), table)
 
 
+def overwrite_table(df: DataFrame, table: str,
+                    partition_cols: tuple[str, ...] = ()) -> None:
+    """Materialize ``df`` as a managed parquet table (optionally
+    partitioned), replacing any previous generation — the unbucketed
+    sibling of write_bucketed."""
+    w = df.write.mode("overwrite").format("parquet")
+    save_as_table(w.partitionBy(*partition_cols) if partition_cols else w,
+                  table)
+
+
 def table_num_buckets(spark, table: str) -> int | None:
     """Bucket count of a catalog table (None if unbucketed) — read
     from the catalog so an APPEND can reuse the exact spec the
@@ -338,30 +383,33 @@ def save_as_table(writer, table: str) -> None:
 
 
 def write_manifest(spark, prefix: str, artifacts: list[str]) -> str:
-    """Crash-atomicity marker for multi-table stored indexes (VERDICT
-    r6 #2): a build that writes N artifact tables commits by writing
-    ``{prefix}_manifest`` LAST, listing every artifact it produced.
-    A crash between artifact writes leaves no manifest — readers that
-    gate on ``index_ready`` then rebuild (overwrite is idempotent)
-    instead of trusting a half-index forever. The manifest is one
-    tiny parquet table; at cluster scale the same role is played by a
-    _SUCCESS marker or a transactional catalog commit.
-    """
-    df = spark.createDataFrame([(a,) for a in artifacts],
-                               "artifact STRING")
-    save_as_table(df.write.mode("overwrite").format("parquet"),
-                  f"{prefix}_manifest")
+    """Commit marker of a stored index (module docstring): written
+    LAST, listing every artifact table of the generation. One tiny
+    parquet table; at cluster scale the same role is played by a
+    _SUCCESS marker or a transactional catalog commit."""
+    overwrite_table(spark.createDataFrame([(a,) for a in artifacts],
+                                          "artifact STRING"),
+                    f"{prefix}_manifest")
     return f"{prefix}_manifest"
 
 
 def invalidate_manifest(spark, prefix: str) -> None:
-    """Drop ``{prefix}_manifest`` BEFORE a rebuild touches any artifact
-    table. Without this, the manifest-last protocol is only crash-atomic
-    for first builds: a rebuild that overwrites artifact #1 and then
-    crashes leaves the OLD manifest pointing at a mixed-generation index
-    that ``index_ready`` would keep trusting forever. Invalidate-first /
-    commit-last brackets the whole rebuild so any crash inside it reads
-    as "not ready → rebuild"."""
+    """Open the bracket: drop ``{prefix}_manifest`` BEFORE any artifact
+    table is rewritten, so a crash mid-rewrite reads as not-ready
+    instead of the old manifest vouching for a mixed generation.
+
+    Also uncaches every cached plan that reads a ``{prefix}_*`` table.
+    saveAsTable(overwrite) drops the catalog entry, writes the files,
+    and re-caches every cached plan over that path BEFORE it re-creates
+    the entry; a plan over a PARTITIONED table lists its partitions
+    through the catalog, so that re-cache fails with
+    TABLE_OR_VIEW_NOT_FOUND and aborts the rewrite (a persisted ANN
+    certificate probe over the ivfpq codes table did exactly this on
+    rebuild). Uncached, those plans re-read the new generation when
+    next used."""
+    for r in spark.sql("SHOW TABLES").collect():
+        if not r.isTemporary and r.tableName.startswith(f"{prefix}_"):
+            spark.catalog.uncacheTable(r.tableName)
     spark.sql(f"DROP TABLE IF EXISTS {prefix}_manifest")
 
 
@@ -377,52 +425,46 @@ def index_ready(spark, prefix: str) -> bool:
     return all(spark.catalog.tableExists(t) for t in listed)
 
 
+def _batch_ids(spark, table: str) -> list[str]:
+    """Sorted distinct ``batch_id`` values of a ledger-shaped table
+    (empty when the table does not exist)."""
+    if not spark.catalog.tableExists(table):
+        return []
+    return sorted(r.batch_id for r in spark.table(table)
+                  .select("batch_id").distinct().collect())
+
+
 def clear_append_ledger(spark, prefix: str,
                         includes_appends: bool = False) -> list[str]:
-    """Drop ``{prefix}_appends`` — REBUILDS must call this (builders
-    do, inside their invalidate-first bracket): a rebuilt index is a
-    new generation containing only the source corpus, so previously
-    appended batches' data is gone — if their ledger entries
-    survived, an at-least-once re-delivery would be skipped and the
-    loss made permanent. COMPACTION must NOT call this: it absorbs
-    batch data into the base generation, so absorbed ids must keep
-    deduplicating re-delivery.
+    """Drop ``{prefix}_appends`` for a rebuild (build_index does this
+    inside its bracket; compaction never does — module docstring) and
+    return the cleared batch ids.
 
-    DELIVERY CONTRACT (closed in r9): a rebuild DISCARDS every
-    previously committed batch whose rows are not in the rebuild's
-    source corpus. The cleared ids are therefore QUARANTINED in
+    A rebuild DISCARDS every committed batch whose rows are not in its
+    source corpus, so the cleared ids are QUARANTINED in
     ``{prefix}_cleared`` (written BEFORE the ledger drop, so a crash
     between the two can only over-quarantine, never lose the record);
-    every subsequent append of a NEW batch id refuses via
+    every later append of a NEW batch id refuses via
     ``require_appendable`` until each quarantined id is either
-    re-delivered (its re-append puts it back in the ledger, which
-    lifts it out of pending automatically) or explicitly waived with
-    ``acknowledge_cleared`` (e.g. the rebuild's source corpus already
-    contained the appended rows, so nothing was lost). No batch can
-    be silently dropped AND no loss can be silently built past.
+    re-delivered (its re-append puts it back in the ledger, which lifts
+    it out of pending automatically) or waived with
+    ``acknowledge_cleared``. No batch can be silently dropped AND no
+    loss can be silently built past.
 
-    ``includes_appends=True`` (ADVICE r9) is the caller's explicit
-    assertion that the rebuild's source corpus CONTAINS every
-    appended batch's rows (the common rebuild-from-absorbed-corpus
-    flow): the cleared ids are then waived inline instead of
-    quarantined, so the provably-lossless path needs no out-of-band
-    ``acknowledge_cleared`` call. The assertion is the caller's to
-    make — a lying caller launders loss, which is why the default
-    stays False."""
+    ``includes_appends=True`` is the caller's assertion that the
+    rebuild's source corpus CONTAINS every appended batch's rows (the
+    rebuild-from-absorbed-corpus flow): the cleared ids are then waived
+    inline instead of quarantined. A lying caller launders loss, which
+    is why the default stays False."""
     import logging
 
-    cleared: list[str] = []
-    if spark.catalog.tableExists(f"{prefix}_appends"):
-        cleared = [r.batch_id
-                   for r in spark.table(f"{prefix}_appends")
-                   .select("batch_id").distinct().collect()]
+    cleared = _batch_ids(spark, f"{prefix}_appends")
     if cleared and includes_appends:
         spark.sql(f"DROP TABLE IF EXISTS {prefix}_appends")
         logging.getLogger(__name__).info(
             "%s: rebuild cleared %d committed append batch(es) %s — "
             "waived inline (caller asserted the rebuild source "
-            "includes their rows)", prefix, len(cleared),
-            sorted(cleared))
+            "includes their rows)", prefix, len(cleared), cleared)
         return cleared
     if cleared:
         spark.createDataFrame([(b,) for b in cleared],
@@ -435,7 +477,7 @@ def clear_append_ledger(spark, prefix: str,
             "%s: rebuild cleared %d committed append batch(es) %s — "
             "quarantined in %s_cleared; new appends refuse until each "
             "is re-delivered or acknowledge_cleared() waives it",
-            prefix, len(cleared), sorted(cleared), prefix)
+            prefix, len(cleared), cleared, prefix)
     return cleared
 
 
@@ -463,16 +505,9 @@ def quarantined_batch_ids(spark, prefix: str) -> list[str]:
     moment a quarantined id's re-append commits (record_append), it
     stops pending with no extra bookkeeping write, and a crash between
     the data write and any cleanup cannot strand it."""
-    if not spark.catalog.tableExists(f"{prefix}_cleared"):
-        return []
-    cleared = {r.batch_id
-               for r in spark.table(f"{prefix}_cleared")
-               .select("batch_id").distinct().collect()}
-    if spark.catalog.tableExists(f"{prefix}_appends"):
-        cleared -= {r.batch_id
-                    for r in spark.table(f"{prefix}_appends")
-                    .select("batch_id").distinct().collect()}
-    return sorted(cleared)
+    committed = set(_batch_ids(spark, f"{prefix}_appends"))
+    return [b for b in _batch_ids(spark, f"{prefix}_cleared")
+            if b not in committed]
 
 
 def acknowledge_cleared(spark, prefix: str,
@@ -485,11 +520,9 @@ def acknowledge_cleared(spark, prefix: str,
     which would otherwise re-quarantine ledger ids they clear).
     Returns the ids actually removed."""
     t = f"{prefix}_cleared"
-    if not spark.catalog.tableExists(t):
+    present = _batch_ids(spark, t)
+    if not present:
         return []
-    present = [r.batch_id
-               for r in spark.table(t).select("batch_id")
-               .distinct().collect()]
     waived = present if batch_ids is None else \
         [b for b in present if b in set(batch_ids)]
     remaining = [b for b in present if b not in set(waived)]
@@ -501,7 +534,7 @@ def acknowledge_cleared(spark, prefix: str,
         spark.createDataFrame([(b,) for b in remaining],
                               "batch_id STRING") \
             .write.mode("overwrite").format("parquet").saveAsTable(t)
-    return sorted(waived)
+    return waived
 
 
 def require_appendable(spark, prefix: str, batch_id: str | None,
@@ -524,29 +557,14 @@ def append_recorded(spark, prefix: str, batch_id: str) -> bool:
     top of at-least-once delivery)."""
     if not spark.catalog.tableExists(f"{prefix}_appends"):
         return False
-    from pyspark.sql import functions as F
-
     return bool(spark.table(f"{prefix}_appends")
                 .where(F.col("batch_id") == batch_id).limit(1).count())
 
 
 def record_append(spark, prefix: str, batch_id: str) -> None:
-    """Commit ``batch_id`` to the append ledger, AFTER the data
-    write. Marker-last means a crash between data and marker re-runs
-    the append on retry — safe under either of the two recovery
-    modes a stored family must pick (do NOT write a marker-last
-    append without one of them):
-
-    1. IDEMPOTENT DATA WRITE (ivfpq/semdedup): the write is a
-       dynamic-partition overwrite keyed on the batch, so a retry
-       replaces that batch's partitions, never duplicates them.
-    2. MANIFEST-BRACKET TRANSACTION (bm25/lm/minhash/spans, via
-       transactional_append): the whole append runs between
-       invalidate_manifest and write_manifest, with the marker
-       recorded just before the recommit — a crash anywhere leaves
-       the index not-ready, the gated reader rebuilds from source,
-       and the rebuild clears this ledger; the retry then lands on
-       the fresh index."""
+    """Commit ``batch_id`` to the append ledger, AFTER the data write
+    (marker-last; the two recovery modes that make the retry safe are
+    in the module docstring)."""
     spark.createDataFrame([(batch_id,)], "batch_id STRING") \
         .write.mode("append").format("parquet") \
         .saveAsTable(f"{prefix}_appends")
@@ -585,53 +603,6 @@ def append_bucketed(df, table: str, bucket_col: str,
     failure)."""
     df.write.mode("append").format("parquet") \
         .bucketBy(n_buckets, bucket_col).saveAsTable(table)
-
-
-def transactional_append(spark, prefix: str, names: list[str],
-                         batch_id: str | None, caller: str,
-                         write_fn, pre_checked: bool = False) -> bool:
-    """THE shared skeleton of a manifest-bracket transactional append
-    — one implementation so the six stored families cannot drift:
-
-      1. refuse if the index is not committed (require_index_ready);
-      2. ledger hit -> return False (committed re-delivery no-op);
-      3. invalidate the manifest (transaction open);
-      4. ``write_fn()`` performs the family's data writes;
-      5. record the ledger entry (just BEFORE the recommit: a crash
-         here reads as not-ready -> rebuild -> ledger cleared);
-      6. recommit the manifest (transaction close).
-
-    A crash at any point between 3 and 6 leaves the index not-ready;
-    the gated reader rebuilds from source and clears the ledger, so
-    a retry of the batch lands exactly once. Returns True if the
-    append ran, False if it was a ledger-skipped re-delivery.
-
-    ``pre_checked``: the caller already ran steps 1-2 itself (to
-    skip its batch compute on a re-delivery) — don't pay the
-    manifest and ledger scans twice per append."""
-    if not pre_checked:
-        require_index_ready(spark, prefix, caller)
-        if (batch_id is not None
-                and append_recorded(spark, prefix, batch_id)):
-            return False
-    # always gated here (even pre_checked) so no family can commit a
-    # new batch past a rebuild-discarded one — see require_appendable
-    require_appendable(spark, prefix, batch_id, caller)
-    invalidate_manifest(spark, prefix)
-    write_fn()
-    # the write may have executed under a DIFFERENT SparkSession than
-    # ``spark`` (foreachBatch hands the ingest a per-query CLONE whose
-    # DataFrames carry it through every derived write) — sessions
-    # share the external catalog and the files but each caches table
-    # relations separately, so without a refresh the caller's session
-    # keeps serving the PRE-APPEND file listing for these tables
-    # (r9: streaming-ingest test caught exactly this)
-    for t in names:
-        spark.catalog.refreshTable(t)
-    if batch_id is not None:
-        record_append(spark, prefix, batch_id)
-    write_manifest(spark, prefix, names)
-    return True
 
 
 def files_per_partition(spark, table: str,
@@ -677,13 +648,10 @@ def compact_partitioned_table(spark, table: str,
 
     Rewrites every row under ``batch_col = base_value`` with one
     file set per partition value, via a staging table (Spark refuses
-    to overwrite a table it is reading). The APPEND LEDGER IS NOT
-    TOUCHED: absorbed batch ids stay committed, so a re-delivery of
-    an absorbed batch remains a no-op — clearing the ledger would
-    re-open the exactly-once window. Caller owns the crash-atomicity
-    bracket (invalidate manifest first, recommit last) so a torn
-    compaction reads as not-ready instead of serving a half-rewrite.
-    Returns {"rows", "files_before", "files_after"} — the stats are
+    to overwrite a table it is reading). The append ledger is not
+    touched, and the caller owns the manifest bracket (compact_index;
+    ledger rule in the module docstring). Returns
+    {"rows", "files_before", "files_after"} — the stats are
     two extra full-table jobs (count + file listing), so pass
     ``collect_stats=False`` on a maintenance cadence where only the
     rewrite matters (ADVICE r7); stats then come back as None. The
@@ -707,9 +675,8 @@ def compact_partitioned_table(spark, table: str,
     committed (saveAsTable registers the entry after the data lands),
     which is what makes the restore safe.
     """
-    from pyspark.sql import functions as F
-
     stage = f"{table}_stage"
+    parts = (*partition_cols, batch_col)
     if spark.catalog.tableExists(stage):
         if not recover_from_stage:
             raise RuntimeError(
@@ -719,9 +686,7 @@ def compact_partitioned_table(spark, table: str,
                 f"of {table}; rerun with recover_from_stage=True to "
                 f"restore {table} from it (or drop {stage} yourself "
                 f"if you have verified {table} is intact)")
-        save_as_table(
-            spark.table(stage).write.mode("overwrite").format("parquet")
-            .partitionBy(*partition_cols, batch_col), table)
+        overwrite_table(spark.table(stage), table, parts)
         spark.sql(f"DROP TABLE IF EXISTS {stage}")
     files_before = (len(spark.table(table).inputFiles())
                     if collect_stats else None)
@@ -731,13 +696,9 @@ def compact_partitioned_table(spark, table: str,
           .repartition(*partition_cols))
     stage_written = overwrite_done = False
     try:
-        save_as_table(
-            df.write.mode("overwrite").format("parquet")
-            .partitionBy(*partition_cols, batch_col), stage)
+        overwrite_table(df, stage, parts)
         stage_written = True
-        save_as_table(
-            spark.table(stage).write.mode("overwrite").format("parquet")
-            .partitionBy(*partition_cols, batch_col), table)
+        overwrite_table(spark.table(stage), table, parts)
         overwrite_done = True
     finally:
         if overwrite_done or not stage_written:
@@ -793,3 +754,295 @@ def compact_parquet(spark, path: str, target_bytes: int = 128 * 1024 * 1024,
                                    recursive=True) if os.path.isfile(f)]
     return {"files_before": len(files), "files_after": len(after),
             "bytes": int(total)}
+
+
+# ------------------------------------------------ stored-artifact lifecycle
+
+def build_index(spark, prefix: str, write, clear_ledger: bool = True,
+                includes_appends: bool = False) -> list[str]:
+    """THE build bracket (module docstring): invalidate the manifest,
+    clear the append ledger, run ``write()`` — which writes the
+    artifact tables and returns their names — and commit the manifest
+    listing them LAST. Returns the committed names.
+
+    ``clear_ledger=False`` is the compaction form (compact_index, the
+    snapshot version cut): the rewrite absorbs the appended batches,
+    so their ids stay committed. ``includes_appends`` is
+    clear_append_ledger's inline waiver."""
+    invalidate_manifest(spark, prefix)
+    if clear_ledger:
+        clear_append_ledger(spark, prefix,
+                            includes_appends=includes_appends)
+    names = write()
+    write_manifest(spark, prefix, names)
+    return names
+
+
+def ledgered_append(spark, prefix: str, batch_id: str | None,
+                    caller: str, write) -> int | None:
+    """The ledger step every append goes through (module docstring):
+    skip a committed ``batch_id`` (returns None, before any batch
+    compute), refuse a new one while quarantined ids are pending, run
+    ``write()`` — which returns the row count — and record the id LAST.
+    ``write`` must be idempotent per batch, or run inside a manifest
+    bracket (transactional_append); ``batch_id=None`` is an ad-hoc
+    at-least-once append with no ledger entry."""
+    if batch_id is not None and append_recorded(spark, prefix, batch_id):
+        return None
+    require_appendable(spark, prefix, batch_id, caller)
+    n = int(write())
+    if batch_id is not None:
+        record_append(spark, prefix, batch_id)
+    return n
+
+
+def transactional_append(spark, prefix: str, names: list[str],
+                         batch_id: str | None, caller: str,
+                         stage) -> int:
+    """Recovery mode 2, the manifest-bracket append (module docstring).
+
+    ``stage()`` runs after the gates (committed index, ledger,
+    quarantine) and BEFORE the manifest is invalidated: it computes
+    everything the append needs from the batch and returns
+    ``(n_rows, write)``. ``write()`` then rewrites or appends the
+    ``names`` tables inside the bracket; the ledger entry is recorded
+    just before the recommit. Returns ``n_rows``, or 0 for a committed
+    re-delivery."""
+    require_index_ready(spark, prefix, caller)
+
+    def write() -> int:
+        n, write_tables = stage()
+        invalidate_manifest(spark, prefix)
+        write_tables()
+        # the write may have executed under a DIFFERENT SparkSession
+        # than ``spark`` (foreachBatch hands the ingest a per-query
+        # CLONE whose DataFrames carry it through every derived
+        # write) — sessions share the catalog and the files but cache
+        # table relations separately, so without a refresh the
+        # caller's session keeps serving the PRE-APPEND file listing
+        for t in names:
+            spark.catalog.refreshTable(t)
+        return n
+
+    n = ledgered_append(spark, prefix, batch_id, caller, write)
+    if n is None:
+        return 0
+    write_manifest(spark, prefix, names)
+    return n
+
+
+def merge_counts(spark, table: str, batch: DataFrame, keys: list[str],
+                 count_col: str, bucket_col: str | None = None,
+                 sort_col: str | None = None):
+    """Additive keyed merge of a batch's counts into a stored count
+    table (counts of a union = sum of counts). Computes the merged
+    table NOW — checkpointed, since the rewrite overwrites the table it
+    reads — and returns the rewrite for the caller's bracket. A
+    ``bucket_col`` table is rewritten under the bucket spec read back
+    from the catalog, so the probe's exchange-free join survives;
+    one-row-per-key is kept because the probe joins counts as single
+    rows, never sums them."""
+    merged = (spark.table(table).unionByName(batch)
+              .groupBy(*keys)
+              .agg(F.sum(count_col).cast("long").alias(count_col))
+              .localCheckpoint(eager=True))
+    if bucket_col is None:
+        return lambda: overwrite_table(merged, table)
+    nb = require_bucket_count(spark, table)
+    return lambda: write_bucketed(merged, table, bucket_col, nb,
+                                  sort_col=sort_col)
+
+
+_DYNAMIC_OVERWRITE_LOCK = threading.Lock()
+
+
+def _dynamic_overwrite_insert(spark, aligned: DataFrame,
+                              table: str) -> None:
+    """insertInto under DYNAMIC partition-overwrite: replaces only
+    the partitions present in ``aligned`` (positional columns, the
+    table's own partitioning). The mode must be set on the SESSION
+    conf — the per-writer ``option("partitionOverwriteMode", ...)``
+    is not honored on the insertInto path and a STATIC overwrite
+    with no partition spec truncates the whole table (observed, and
+    exactly the failure this helper exists to prevent); conf is
+    restored in a finally.
+
+    The set/write/restore is serialized under a process lock: the
+    conf is SESSION-GLOBAL, so two interleaved appends could
+    otherwise restore 'static' under each other and truncate an
+    index. The lock covers every writer that goes through this
+    helper (all in-repo append paths); code outside it flipping the
+    same conf concurrently cannot be excluded by the lock — the
+    conf is RE-READ and asserted 'dynamic' immediately before the
+    insertInto, which NARROWS the race window to the instant between
+    this check and the write but cannot close it (a flip landing
+    inside that instant still truncates). On a shared cluster use a
+    table format with a transactional replaceWhere — that is the real
+    cure, not this check.
+
+    The conf is set on ``aligned``'s OWN session, not the caller's
+    handle: under foreachBatch the batch DataFrame belongs to a
+    per-query session CLONE with its own conf, and insertInto
+    resolves the mode from the session that executes the write —
+    setting it on the outer handle left the clone in 'static' and
+    truncated the whole cells table (caught by the semdedup
+    streaming-ingest restart test)."""
+    key = "spark.sql.sources.partitionOverwriteMode"
+    sess = aligned.sparkSession
+    with _DYNAMIC_OVERWRITE_LOCK:
+        prev = sess.conf.get(key, "static")
+        sess.conf.set(key, "dynamic")
+        try:
+            actual = sess.conf.get(key)
+            if actual.lower() != "dynamic":
+                raise RuntimeError(
+                    f"partitionOverwriteMode flipped to {actual!r} "
+                    f"under the overwrite lock — refusing the "
+                    f"insertInto into {table}: a static overwrite "
+                    f"here would truncate the whole table")
+            aligned.write.insertInto(table, overwrite=True)
+        finally:
+            sess.conf.set(key, prev)
+
+
+def partitioned_append(spark, prefix: str, table: str,
+                       batch_id: str | None, caller: str, stage,
+                       auto_compact_files_per_cell: int | None = None
+                       ) -> int:
+    """Recovery mode 1 on a ``(cell, _batch)``-partitioned index table
+    (module docstring): after the gates, ``stage()`` returns the
+    batch's rows with a ``cell`` column; they land under
+    ``_batch = batch_id`` by DYNAMIC partition overwrite, so a retry
+    after a crash anywhere before the ledger write replaces exactly
+    its own partitions. ``batch_id=None`` is a plain append under
+    ``_batch='adhoc'`` (at-least-once). A persisted ``stage()`` frame
+    is unpersisted after the write.
+
+    ``auto_compact_files_per_cell``: once the append has committed,
+    compact the table (compact_index) when any cell holds more files
+    than this — see _maybe_auto_compact. Returns rows appended, 0 for
+    a committed re-delivery."""
+    require_index_ready(spark, prefix, caller)
+
+    def write() -> int:
+        staged = stage()
+        try:
+            rows = staged.withColumn("_batch", F.lit(batch_id or "adhoc"))
+            n = rows.count()
+            # insertInto is positional: align to the table's column
+            # order (partition columns last)
+            aligned = rows.select(
+                *[f.name for f in spark.table(table).schema])
+            if batch_id is not None:
+                _dynamic_overwrite_insert(spark, aligned, table)
+            else:
+                aligned.write.mode("append").format("parquet") \
+                    .partitionBy("cell", "_batch").saveAsTable(table)
+        finally:
+            if staged.is_cached:
+                staged.unpersist()
+        # cross-session relation-cache refresh (see transactional_append)
+        spark.catalog.refreshTable(table)
+        return n
+
+    n = ledgered_append(spark, prefix, batch_id, caller, write)
+    if n is None:
+        return 0
+    _maybe_auto_compact(spark, prefix, table, auto_compact_files_per_cell,
+                        lambda: compact_index(spark, prefix, table),
+                        committed_rows=n)
+    return n
+
+
+def compact_index(spark, prefix: str, table: str) -> dict:
+    """Absorb every appended batch of the ``(cell, _batch)``-partitioned
+    ``table`` back into its base generation (compact_partitioned_table)
+    inside the build bracket with the ledger KEPT, recommitting the
+    SAME artifact list — a torn compaction reads as not-ready, and
+    absorbed ids keep deduplicating re-delivery. Returns the
+    compaction stats.
+
+    SINGLE-WRITER contract: an append that commits while the rewrite
+    is in flight would be erased by the final overwrite — with its
+    ledger entry surviving, re-delivery would be skipped and the
+    loss silent. Best-effort enforcement: the append ledger is
+    snapshotted before the rewrite and re-checked after; a
+    concurrent append raises, naming the batch ids that must be
+    re-ingested under NEW ids (their data is gone, their old ids are
+    burned), and leaves the manifest invalidated. Invalidating first
+    also closes most of the window: every append is gated on
+    index_ready, so once the manifest is gone new appends refuse to
+    start. The guard sees only LEDGERED appends — an adhoc append
+    (batch_id=None) committing mid-rewrite is erased with no
+    detection, within its stated at-least-once contract. A
+    transactional table format is the real cure on a shared
+    cluster."""
+    # same gate as the appends: compacting an uncommitted index gets
+    # the designed ValueError, not a raw catalog error from the
+    # manifest read below
+    require_index_ready(spark, prefix, "compact_index")
+    manifest = [r.artifact
+                for r in spark.table(f"{prefix}_manifest").collect()]
+    before = set(_batch_ids(spark, f"{prefix}_appends"))
+    stats: dict = {}
+
+    def write() -> list[str]:
+        stats.update(compact_partitioned_table(spark, table, ["cell"]))
+        raced = set(_batch_ids(spark, f"{prefix}_appends")) - before
+        if raced:
+            raise RuntimeError(
+                f"append(s) {sorted(raced)} committed during compaction "
+                f"of {table} — depending on timing their rows were "
+                f"either erased by the rewrite or absorbed into it; "
+                f"verify presence before re-ingesting under NEW batch "
+                f"ids (the old ids are burned in the ledger); the "
+                f"manifest is left invalidated so gated readers "
+                f"rebuild")
+        return manifest
+
+    build_index(spark, prefix, write, clear_ledger=False)
+    return stats
+
+
+class MaintenanceFailedError(RuntimeError):
+    """The APPEND COMMITTED (data + ledger) but the in-path
+    auto-compaction that followed it failed. Distinct type so
+    orchestrators do not mark the batch failed: for ledgered
+    batch_id appends a blind retry is harmless (the ledger dedupes it
+    to 0) but unnecessary; for batch_id=None it would DUPLICATE rows.
+    Carries ``committed_rows`` — the count the append would have
+    returned — plus ``prefix``/``table`` for the maintenance ticket.
+    """
+
+    def __init__(self, prefix: str, table: str, committed_rows: int):
+        self.prefix = prefix
+        self.table = table
+        self.committed_rows = int(committed_rows)
+        super().__init__(
+            f"auto-compaction of {table} failed AFTER the append "
+            f"committed {self.committed_rows} row(s) (data + ledger) "
+            f"— do NOT re-ingest the batch; the index is left "
+            f"not-ready and gated readers will rebuild (or finish "
+            f"the compaction manually)")
+
+
+def _maybe_auto_compact(spark, prefix: str, table: str,
+                        threshold: int | None, compact_fn,
+                        committed_rows: int = 0) -> None:
+    """Append-path compaction trigger: fire ``compact_fn`` when any
+    partition of ``table`` exceeds ``threshold`` files (None: never).
+    Runs AFTER the ledger write, so the append is already committed —
+    a crash mid-compaction leaves the manifest invalidated (gated
+    readers rebuild; torn rewrites are never served), exactly the
+    bracket a manual compaction runs under. A compaction failure
+    raises MaintenanceFailedError carrying ``committed_rows`` so the
+    caller's success (the append) is not reported as a failed
+    ingest."""
+    if threshold is None:
+        return
+    if files_per_partition(spark, table)["max_per_cell"] > threshold:
+        try:
+            compact_fn()
+        except Exception as exc:
+            raise MaintenanceFailedError(prefix, table,
+                                         committed_rows) from exc

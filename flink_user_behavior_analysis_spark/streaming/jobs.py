@@ -395,33 +395,6 @@ def curation_ingest_batch(spark: SparkSession, prefix: str,
         batch_df.unpersist()
 
 
-def run_curation_ingest(raw_docs: DataFrame, prefix: str,
-                        checkpoint_dir: str, min_quality: float = 0.6,
-                        threshold: float = 0.8,
-                        job_id: str = "curation") -> None:
-    """End-to-end streaming curation INGEST (closes the r8 gap where
-    curation_stream survivors stopped at the probe): quality-filter
-    the arriving documents (stateless scan predicate — same head as
-    curation_stream), then per micro-batch probe-survive-append into
-    the stored corpus under the epoch-derived batch_id. The corpus a
-    later batch probes therefore already contains every earlier
-    batch's survivors, and a crash at ANY point replays the epoch
-    into a ledger hit — the streaming engine's replay semantics and
-    the exactly-once append ledger compose instead of fighting.
-    The span-count family wires identically:
-    run_ingest_foreach_batch(stream, ckpt, lambda b, bid:
-    span_append_counts(spark, prefix, b, batch_id=bid))."""
-    from ..operators.text import quality_score_col
-
-    spark = raw_docs.sparkSession
-    accepted = raw_docs.where(quality_score_col("text") >= min_quality)
-    run_ingest_foreach_batch(
-        accepted, checkpoint_dir,
-        lambda b, bid: curation_ingest_batch(spark, prefix, b, bid,
-                                             threshold),
-        job_id=job_id)
-
-
 def dsir_ingest_batch(spark: SparkSession, prefix_raw: str,
                       prefix_tgt: str, batch_df: DataFrame,
                       batch_id: str, logw_threshold: float = 0.0,
@@ -647,15 +620,12 @@ def snapshot_cdc_ingest_batch(spark: SparkSession, prefix: str,
     compaction can see the complete candidate snapshot and close the
     'removed' gap that a per-slice probe structurally cannot.
 
-    Exactly-once composition (the run_dsir_ingest shape): the ledger
-    check early-exits a committed re-delivery BEFORE paying the
-    probe; both writes are idempotent per-batch directory overwrites
-    (a replayed epoch rewrites the same rows — verdicts are a pure
-    function of the slice and the frozen store); the ledger commits
-    LAST. A crash anywhere replays the epoch into either a clean
-    rewrite (pre-ledger) or a no-op (post-ledger). The quarantine
-    gate refuses NEW batches while rebuild-discarded ids are pending,
-    like every stored family. Slices must partition the candidate
+    Exactly-once through the shared ledger step (sources/readers.py
+    ledgered_append, idempotent-write mode): a committed re-delivery
+    exits BEFORE paying the probe; both writes are per-batch directory
+    overwrites (verdicts are a pure function of the slice and the
+    frozen store), so a replayed epoch rewrites the same rows; the
+    ledger commits LAST. Slices must partition the candidate
     snapshot's keys (two live batches sharing a key would stage
     conflicting fingerprints — same precondition as the contam-gram
     appends; epoch REPLAYS are deduped by the ledger and are fine).
@@ -664,51 +634,52 @@ def snapshot_cdc_ingest_batch(spark: SparkSession, prefix: str,
     epoch)."""
     from ..operators.versioning import (fingerprint_snapshot,
                                         snapshot_probe_from_store)
-    from ..sources.readers import (append_recorded, record_append,
-                                   require_appendable)
+    from ..sources.readers import ledgered_append
 
-    if append_recorded(spark, prefix, batch_id):
-        return 0
-    require_appendable(spark, prefix, batch_id,
-                       "snapshot_cdc_ingest_batch")
-    # a compacted staging dir is a CLOSED cycle: staging more slices
-    # into it would pollute the next compact's "complete candidate
-    # snapshot" union with the previous cycle's leftovers (wrong
-    # removals) — the caller must rotate staging_dir per cycle
-    if _hadoop_path_exists(spark, f"{staging_dir}/_compacted"):
-        raise ValueError(
-            f"staging dir {staging_dir} was already compacted into a "
-            f"version cut — rotate staging_dir (and checkpoint_dir) "
-            f"per snapshot cycle; staging into a closed cycle would "
-            f"corrupt the next compaction's removal sweep")
-    # a cycle whose compact already MATERIALIZED its removal sweep
-    # (ADVICE r13 torn-state protocol) is closed to new slices even
-    # if the compact crashed before the _compacted marker: a slice
-    # staged now would be invisible to the already-computed removed
-    # set and double-counted by the (idempotent) re-cut
-    if _hadoop_path_exists(spark, f"{staging_dir}/_cut_pending"):
-        raise ValueError(
-            f"staging dir {staging_dir} has a compaction in flight "
-            f"(_cut_pending) — re-run snapshot_cdc_compact to finish "
-            f"the cycle, then rotate staging_dir for new slices")
-    batch_df = batch_df.persist()
-    try:
-        verdicts = snapshot_probe_from_store(
-            spark, prefix, batch_df, key_cols, content_cols).persist()
+    def write() -> int:
+        # a compacted staging dir is a CLOSED cycle: staging more
+        # slices into it would pollute the next compact's "complete
+        # candidate snapshot" union with the previous cycle's
+        # leftovers (wrong removals) — the caller must rotate
+        # staging_dir per cycle
+        if _hadoop_path_exists(spark, f"{staging_dir}/_compacted"):
+            raise ValueError(
+                f"staging dir {staging_dir} was already compacted into "
+                f"a version cut — rotate staging_dir (and "
+                f"checkpoint_dir) per snapshot cycle; staging into a "
+                f"closed cycle would corrupt the next compaction's "
+                f"removal sweep")
+        # a cycle whose compact already MATERIALIZED its removal sweep
+        # (torn-state protocol) is closed to new slices even if the
+        # compact crashed before the _compacted marker: a slice
+        # staged now would be invisible to the already-computed
+        # removed set and double-counted by the (idempotent) re-cut
+        if _hadoop_path_exists(spark, f"{staging_dir}/_cut_pending"):
+            raise ValueError(
+                f"staging dir {staging_dir} has a compaction in flight "
+                f"(_cut_pending) — re-run snapshot_cdc_compact to "
+                f"finish the cycle, then rotate staging_dir for new "
+                f"slices")
+        batch = batch_df.persist()
         try:
-            n = verdicts.count()
-            if verdict_sink is not None:
-                (verdicts.write.mode("overwrite")
-                 .parquet(f"{verdict_sink}/ingest_batch={batch_id}"))
+            verdicts = snapshot_probe_from_store(
+                spark, prefix, batch, key_cols, content_cols).persist()
+            try:
+                n = verdicts.count()
+                if verdict_sink is not None:
+                    (verdicts.write.mode("overwrite")
+                     .parquet(f"{verdict_sink}/ingest_batch={batch_id}"))
+            finally:
+                verdicts.unpersist()
+            (fingerprint_snapshot(batch, key_cols, content_cols)
+             .write.mode("overwrite")
+             .parquet(f"{staging_dir}/ingest_batch={batch_id}"))
+            return n
         finally:
-            verdicts.unpersist()
-        (fingerprint_snapshot(batch_df, key_cols, content_cols)
-         .write.mode("overwrite")
-         .parquet(f"{staging_dir}/ingest_batch={batch_id}"))
-        record_append(spark, prefix, batch_id)  # ledger LAST
-        return int(n)
-    finally:
-        batch_df.unpersist()
+            batch.unpersist()
+
+    return ledgered_append(spark, prefix, batch_id,
+                           "snapshot_cdc_ingest_batch", write) or 0
 
 
 def run_snapshot_cdc_ingest(candidate: DataFrame, prefix: str,
@@ -736,9 +707,8 @@ def run_snapshot_cdc_ingest(candidate: DataFrame, prefix: str,
     (cdc_default_job_id, ADVICE r13) — so a crash-restart of the
     SAME cycle still replays under the same ids (exactly-once
     preserved) even if the restart spells the path differently,
-    while rotated cycles can never collide — even in the crash
-    window between the version cut and the ledger clear in
-    snapshot_cdc_compact."""
+    while rotated cycles can never collide — even in a crash inside
+    snapshot_cdc_compact's version cut."""
     spark = candidate.sparkSession
     if job_id is None:
         job_id = cdc_default_job_id(spark, staging_dir)
@@ -776,14 +746,14 @@ def snapshot_cdc_compact(spark: SparkSession, prefix: str,
     r12), and the cut is one bucketed write of rows that already
     exist on disk.
 
-    The cut is this family's rebuild analog, so it ends by CLEARING
-    the append ledger (ADVICE r12): the new version IS the staged
-    batches' union, so every ledgered id's data is contained in the
-    cut — the provably-lossless ``includes_appends=True`` waiver.
-    Without the clear, a next cycle whose batch ids collided would
-    be silently skipped as replays. (Belt-and-suspenders: the
-    default job_id also derives from the rotated staging_dir, so
-    ids can't collide even if a crash lands between cut and clear.)
+    The cut is this family's rebuild analog, so its build bracket
+    CLEARS the append ledger: the new version IS the staged batches'
+    union, so every ledgered id's data is contained in the cut — the
+    provably-lossless ``includes_appends=True`` waiver. Without the
+    clear, a next cycle whose batch ids collided would be silently
+    skipped as replays. (Belt-and-suspenders: the default job_id also
+    derives from the rotated staging_dir, so ids can't collide even
+    if a crash lands inside the cut.)
 
     The compact also drops a ``_compacted`` marker into the staging
     dir: the cycle is closed, and any later stage or re-compact
@@ -807,8 +777,7 @@ def snapshot_cdc_compact(spark: SparkSession, prefix: str,
     the scan fails on the vanished files. The janitor's default
     keep_last=1 keeps the newest closed cycle for exactly this
     reason."""
-    from ..operators.versioning import _diff_fps, snapshot_cut_version
-    from ..sources.readers import clear_append_ledger
+    from ..operators.versioning import _cut_fps, _diff_fps
 
     keys = list(key_cols)
     if _hadoop_path_exists(spark, f"{staging_dir}/_compacted"):
@@ -833,9 +802,9 @@ def snapshot_cdc_compact(spark: SparkSession, prefix: str,
         # so recomputing the diff here would overwrite the correct
         # sidecar with an empty one and silently lose the cycle's
         # removal verdicts. Reuse the sidecar; the cut is idempotent
-        # (same staged rows, manifest bracket), so finishing it plus
-        # the ledger clear and the _compacted marker is safe whether
-        # the crash hit before or after each of them.
+        # (same staged rows, manifest bracket, ledger cleared inside
+        # it), so finishing it and the _compacted marker is safe
+        # whether the crash hit before or after each of them.
         if not _hadoop_path_exists(spark, removed_path):
             raise ValueError(
                 f"staging dir {staging_dir} has _cut_pending but no "
@@ -854,8 +823,7 @@ def snapshot_cdc_compact(spark: SparkSession, prefix: str,
         # the pending marker brackets the cut: its presence on
         # re-entry means "sidecar is authoritative, fps may be cut"
         _hadoop_touch(spark, pending_path)
-    snapshot_cut_version(spark, prefix, staged, keys, n_buckets)
-    clear_append_ledger(spark, prefix, includes_appends=True)
+    _cut_fps(spark, prefix, staged, keys, n_buckets, includes_appends=True)
     # close the cycle: later stage/compact attempts against this
     # landing zone refuse instead of corrupting the next removal
     # sweep (underscore-prefixed, invisible to the staged-slice scan)

@@ -2055,6 +2055,34 @@ def test_semdedup_missing_artifact_and_train_dir_fails_fast(
         qp._semdedup_read_centroids_or_fit(spark)
 
 
+def test_overlapped_action_failure_does_not_mask_main_error(spark):
+    """When the main path AND the overlapped action both fail, the
+    main-path error propagates: awaiting the overlapped future in a
+    ``finally`` used to replace it with the future's own error."""
+    from concurrent.futures import Future
+
+    from flink_user_behavior_analysis_spark.operators.dedup import (
+        release_signature_cache,
+    )
+    from flink_user_behavior_analysis_spark.queries_pipeline import (
+        _ann_certificate,
+    )
+
+    @F.udf("long")
+    def boom(x):
+        raise ValueError("main path failed")
+
+    fut = Future()
+    fut.set_exception(RuntimeError("overlapped action failed"))
+    approx = spark.range(3).where(boom("id") > 0)
+    try:
+        with pytest.raises(Exception, match="main path failed"):
+            _ann_certificate(spark, spark.range(1), approx,
+                             spark.range(1), 0.5, truth_fut=fut)
+    finally:
+        release_signature_cache(spark)
+
+
 def test_pii_scrub_counts_and_placeholders(spark, sf_dir):
     """pii_scrub: known synthetic rows scrub to exact placeholder
     text with exact per-class counts; and the registered query's

@@ -234,3 +234,38 @@ def test_compact_parquet_reduces_files_and_preserves_rows(spark, sf_dir,
 
     ids = pq.read_table(one, columns=["doc_id"])["doc_id"].to_pylist()
     assert ids == sorted(ids)
+
+
+def test_stored_lifecycle_primitives_are_called_only_in_readers():
+    """The stored-artifact commit protocol lives once, in
+    sources/readers.py: no other package module calls the manifest or
+    ledger primitives directly (families go through build_index and
+    the append entry points), and transactional_append has no
+    pre-check bypass."""
+    import ast
+    import inspect
+    import pathlib
+
+    import flink_user_behavior_analysis_spark as pkg
+    from flink_user_behavior_analysis_spark.sources import readers
+
+    banned = {"invalidate_manifest", "write_manifest",
+              "clear_append_ledger", "record_append",
+              "require_appendable", "require_index_ready"}
+    root = pathlib.Path(pkg.__file__).resolve().parent
+    home = pathlib.Path(readers.__file__).resolve()
+    offenders = []
+    for path in sorted(root.rglob("*.py")):
+        if path.resolve() == home:
+            continue
+        for node in ast.walk(ast.parse(path.read_text(encoding="utf-8"))):
+            if not isinstance(node, ast.Call):
+                continue
+            f = node.func
+            name = getattr(f, "id", None) or getattr(f, "attr", None)
+            if name in banned:
+                offenders.append(
+                    f"{path.relative_to(root)}:{node.lineno} {name}")
+    assert not offenders, offenders
+    assert "pre_checked" not in inspect.signature(
+        readers.transactional_append).parameters
